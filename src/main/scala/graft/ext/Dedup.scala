@@ -144,7 +144,7 @@ object Dedup {
         org.apache.spark.sql.GraftColumns.expression(c)))
 
   /** E2 (MinHash-LSH, oracle-bridged flavor): the same shingle → k-min
-    * signature → banded bucket join pipeline as [[minhashCandidates]],
+    * signature → banded bucket-grouping pipeline as [[minhashCandidates]],
     * with the engine-neutral [[portableFamily]] — ONE md5 per shingle,
     * k exact affine mixes — so DuckDB can restate the whole pipeline and
     * the driver hash-checks the candidate set.
@@ -152,8 +152,10 @@ object Dedup {
     * Plan shape is also the scale shape: shingles explode once, the k
     * family hashes are k plain codegen'd columns (no HOF), signatures are
     * k map-side `min` partial aggregates (one shuffle on doc), band keys
-    * are signature slices joined by value, and oversized buckets are
-    * dropped by `maxBucket` exactly as in the throughput flavor.
+    * are signature slices, each (band, key) bucket is grouped once (one
+    * shuffle on the key, no join) and its strictly-ordered pairs are
+    * expanded in-row, and oversized buckets are dropped by `maxBucket`
+    * exactly as in the throughput flavor.
     * [[minhashCandidates]] (xxhash64+splitmix, fused native expression)
     * remains the 100 TB throughput path. */
   def minhashCandidatesPortable(
