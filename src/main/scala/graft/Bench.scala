@@ -10,13 +10,12 @@ import org.apache.spark.sql.functions._
   *    not optimized away as they would be under `.count()`;
   *  - failures are reported as failures (negative time + "failed" list),
   *    never silently folded into the total;
-  *  - session matches Verify (UTC, nanos legacy read) so bench and
-  *    correctness see identical date semantics.
+  *  - the session is [[etl.Sessions]]'s, the one Verify runs, so bench
+  *    and correctness see identical conf.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // host state AT START (VERDICT r9 item 4): idleness matters when the
     // timings begin, not at report time. A loaded host or a foreign JVM
     // alive NOW is what poisons the numbers — flag the whole record.
@@ -43,43 +42,11 @@ object Bench {
       strayAtStart = strayJvms()
     }
     val contaminated = busy
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size input splits for TEXT-EXPANDING parquet (the 100 TB knob the
-      // task calls out): documents.parquet compresses ~3:1 and the default
-      // 128 MB split put the ENTIRE sf10 corpus in ONE scan task — e16's
-      // per-char regex then ran single-core and its orderBy's range
-      // sampling paid the scan twice (19× at 10× rows, round-19 probe).
-      // 16 MB splits parallelize to row-group granularity; files under
-      // 16 MB (every sf0.1 table) are unaffected. Overridable (ADVICE
-      // r19): a real cluster with many files may want the 128m default
-      // back — set SPARK_GRAFT_MAX_PARTITION_BYTES.
-      // partitioned index/code layouts use up to nlist=64 `cid=` dirs; the
-      // default parallelPartitionDiscovery threshold (32) turns every such
-      // listing into a 64-task Spark JOB. 128 keeps those listings on the
-      // driver's own listing pool — ~ms on any FS at that dir count (r22)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      // let AQE size cached-plan partitions from the DATA (r22): the
-      // default pins every persisted stage at the static shuffle count
-      // (32 here), so each cache consumer pays 32 near-empty tasks on a
-      // KB-scale cached stage — the measured 8c-beats-32c inversion on
-      // the pipeline capstones. `true` is scale-adaptive by
-      // construction: AQE only coalesces when partitions are small, a
-      // 100 TB cached stage keeps its width. Overridable for A/Bs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.Sessions.session()
     // environment fingerprint for cross-run comparability (heap pressure /
     // CPU contention are the usual causes of bench divergence)
     System.err.println(s"[bench] maxHeap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MiB " +
-      s"procs=${Runtime.getRuntime.availableProcessors()} cpus=$cpus")
+      s"procs=${Runtime.getRuntime.availableProcessors()} cpus=${graft.etl.Sessions.cpus}")
     // one warmup action so JVM/codegen startup isn't billed to the first query
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     // optional prefix filter for local iteration, e.g. SPARK_GRAFT_ONLY=e02,e05

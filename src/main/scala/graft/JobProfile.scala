@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB profile of one declared query (optimization-round measurement
   * tool, guide §1): runs `args(0)` once against SPARK_GRAFT_SF_DIR with a
@@ -17,24 +16,7 @@ object JobProfile {
     val name = args.headOption.getOrElse(sys.error("usage: JobProfile <query> [reps]"))
     val reps = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // partitioned index/code layouts use up to nlist=64 `cid=` dirs; the
-      // default parallelPartitionDiscovery threshold (32) turns every such
-      // listing into a 64-task Spark JOB. 128 keeps those listings on the
-      // driver's own listing pool — ~ms on any FS at that dir count (r22)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.Sessions.session()
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
 
     final case class Job(id: Int, t0: Long, var t1: Long = -1L,

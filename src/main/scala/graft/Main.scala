@@ -62,43 +62,15 @@ object Main {
         |     JDBC_USER, JDBC_PASSWORD, DB_SCHEMA, SYNC_MONTHS, LOG_LEVEL,
         |     TEST_ACCOUNTS (csv override),
         |     AWS_ACCESS_KEY_ID, AWS_SECRET_ACCESS_KEY, AWS_REGION,
-        |     S3_ENDPOINT, S3_PATH_STYLE_ACCESS (for s3a:// roots)""".stripMargin)
+        |     S3_ENDPOINT, S3_PATH_STYLE_ACCESS (for s3a:// roots),
+        |     SPARK_GRAFT_MASTER (default local[$SPARK_GRAFT_CPUS]),
+        |     SPARK_GRAFT_CPUS (default: the core count),
+        |     SPARK_GRAFT_MAX_PARTITION_BYTES (default 16m)""".stripMargin)
     sys.exit(2)
   }
 
   private def session(cfg: EngineConfig): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split text-expanding parquet at 16 MB (see Bench.scala) so a fat
-      // single file still scans in parallel on a local master. On a real
-      // cluster with many files this multiplies task count ~8x over the
-      // 128m default, so it is env-overridable rather than hardwired
-      // (ADVICE r19): SPARK_GRAFT_MAX_PARTITION_BYTES=128m restores the
-      // stock split size without rebuilding.
-      // partitioned index/code layouts use up to nlist=64 `cid=` dirs; the
-      // default parallelPartitionDiscovery threshold (32) turns every such
-      // listing into a 64-task Spark JOB. 128 keeps those listings on the
-      // driver's own listing pool — ~ms on any FS at that dir count (r22)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      // let AQE size cached-plan partitions from the DATA (r22): the
-      // default pins every persisted stage at the static shuffle count
-      // (32 here), so each cache consumer pays 32 near-empty tasks on a
-      // KB-scale cached stage — the measured 8c-beats-32c inversion on
-      // the pipeline capstones. `true` is scale-adaptive by
-      // construction: AQE only coalesces when partitions are small, a
-      // 100 TB cached stage keeps its width. Overridable for A/Bs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val b = Sessions.builder()
     // O26: the S3 surface (credentials/region/endpoint/path-style) flows
     // from EngineConfig into the Hadoop fs config so s3a:// roots work
     // unchanged (mirror of the reference's DuckDB httpfs setup,

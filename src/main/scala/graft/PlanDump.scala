@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for the named declared queries (the
   * optimization-round plan evidence: plans/r21/<query>_{before,after}.txt).
@@ -14,31 +13,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, names) = args.take(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // partitioned index/code layouts use up to nlist=64 `cid=` dirs; the
-      // default parallelPartitionDiscovery threshold (32) turns every such
-      // listing into a 64-task Spark JOB. 128 keeps those listings on the
-      // driver's own listing pool — ~ms on any FS at that dir count (r22)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      // let AQE size cached-plan partitions from the DATA (r22): the
-      // default pins every persisted stage at the static shuffle count
-      // (32 here), so each cache consumer pays 32 near-empty tasks on a
-      // KB-scale cached stage — the measured 8c-beats-32c inversion on
-      // the pipeline capstones. `true` is scale-adaptive by
-      // construction: AQE only coalesces when partitions are small, a
-      // 100 TB cached stage keeps its width. Overridable for A/Bs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.Sessions.session()
     new java.io.File(outDir).mkdirs()
     names.split(",").foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,51 +16,9 @@ object Verify {
         s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
           s"(declared: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the
-    // multi-process gate (VERDICT r20 #2) runs the same verify under
-    // `local-cluster[4,8,6g]` so task/broadcast serialization, the
-    // localCheckpoint block placement and the persisted-index partition
-    // reads cross REAL executor boundaries at least once per round
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder().master(master)
-    // local-cluster executors are SEPARATE JVMs launched by the embedded
-    // workers — they need this build's classes (and the unmanaged Spark
-    // jars) on their classpath explicitly; a plain local[] master ignores
-    // this setting
-    val builder =
-      if (master.startsWith("local-cluster"))
-        builder0.config("spark.executor.extraClassPath",
-          sys.props.getOrElse("java.class.path", ""))
-      else builder0
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: split text-expanding parquet at 16 MB so big-SF
-      // verify runs parallelize the scan (see Bench.scala for the e16
-      // single-task story); hash parity is partitioning-independent by
-      // the float-portability rules, re-proven by the full gate.
-      // Env-overridable like Bench (ADVICE r19).
-      // partitioned index/code layouts use up to nlist=64 `cid=` dirs; the
-      // default parallelPartitionDiscovery threshold (32) turns every such
-      // listing into a 64-task Spark JOB. 128 keeps those listings on the
-      // driver's own listing pool — ~ms on any FS at that dir count (r22)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      // let AQE size cached-plan partitions from the DATA (r22): the
-      // default pins every persisted stage at the static shuffle count
-      // (32 here), so each cache consumer pays 32 near-empty tasks on a
-      // KB-scale cached stage — the measured 8c-beats-32c inversion on
-      // the pipeline capstones. `true` is scale-adaptive by
-      // construction: AQE only coalesces when partitions are small, a
-      // 100 TB cached stage keeps its width. Overridable for A/Bs.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[...] runs the same verify across
+    // real executor JVMs (see Sessions.master)
+    val spark = graft.etl.Sessions.session()
     new java.io.File(outDir).mkdirs()
     // A query that throws must SURFACE in the driver's gate, not vanish
     // (VERDICT r11: three queries errored before producing output, the

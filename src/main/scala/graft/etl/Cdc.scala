@@ -74,9 +74,6 @@ object Cdc {
     untouched.unionByName(upserts)
   }
 
-  /** Convenience single-expression ordering for (ts, unique-id) logs. */
-  def byTsThen(id: String, ts: String = "ts"): Seq[String] = Seq(ts, id)
-
   /** Out-of-order-safe CDC apply: merge a change batch into a VERSIONED
     * state that keeps each key's `orderCols` and op — including DELETE
     * TOMBSTONES — so batches may arrive in any order and the state still

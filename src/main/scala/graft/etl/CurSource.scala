@@ -63,14 +63,6 @@ object CurSource {
     df.filter(col(tsCol) >= lit(startInclusive).cast("timestamp") &&
       col(tsCol) < lit(endExclusive).cast("timestamp"))
 
-  def readWindowed(
-      spark: SparkSession,
-      path: String,
-      tsCol: String,
-      startInclusive: String,
-      endExclusive: String): DataFrame =
-    windowed(spark.read.parquet(path), tsCol, startInclusive, endExclusive)
-
   /** File-count existence probe (aws_cur.py:140-147 / main.py:200-205):
     * metadata-only, no data read. */
   def fileCount(spark: SparkSession, path: String): Long =

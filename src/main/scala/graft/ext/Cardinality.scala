@@ -59,7 +59,6 @@ object Cardinality {
     * distinct-shuffle of every token occurrence per pair.
     */
   def kmvOverlap(docs: DataFrame, groupCol: String, textCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sk = docs
       .select(col(groupCol),
         explode(call_function("graft_portable_words", col(textCol))).as("h0"))
@@ -111,7 +110,6 @@ object Cardinality {
     */
   def kmvJoinSizeEstimate(left: DataFrame, leftKey: String,
       right: DataFrame, rightKey: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(left.sparkSession)
     def side(df: DataFrame, key: String, p: String): DataFrame = df.agg(
       call_function("graft_kmv", portableStringHash(col(key)), lit(k)).as(s"${p}_kmv"),
       count(col(key)).as(s"${p}_rows"))
@@ -152,7 +150,6 @@ object Cardinality {
     * heavy-hitter pass and only the GRID is consulted). */
   def cmsTokenFrequencies(docs: DataFrame, textCol: String,
       w: Int, d: Int, topK: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = docs.select(explode(split(col(textCol), " ")).as("t"))
     val sketch = toks.agg(
       call_function("graft_cms", col("t"), lit(w), lit(d)).as("cms"))
@@ -247,7 +244,6 @@ object Cardinality {
       .reduce(_ + _).cast("double") / lit(AmsEstimators.size)
 
   def amsSelfJoinSize(df: DataFrame, keyCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // NULL keys would silently vanish from the ± sums (md5(NULL) is
     // NULL) while still counting in n_rows/f2_exact — scope BOTH arms
     // to non-null keys so exact and estimate describe the same bag
@@ -273,7 +269,6 @@ object Cardinality {
     * whose formatting is engine-specific). */
   def profileColumns(df: DataFrame, cols: Seq[String], k: Int): DataFrame = {
     require(cols.nonEmpty, "profileColumns needs at least one column")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val aggs = cols.flatMap { c =>
       // backtick-quote so a dotted name stays ONE column, not a struct
       // path; coalesce keeps an empty table at nulls=0, not a NULL sum
@@ -307,7 +302,6 @@ object Cardinality {
     * whole-stage codegen; the aggregate itself runs as an
     * ObjectHashAggregate with map-side partial sketches. */
   def kmvDistinctTokens(docs: DataFrame, groupCol: String, textCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(groupCol),
         explode(call_function("graft_portable_words", col(textCol))).as("h0"))

@@ -62,7 +62,6 @@ object CorpusPipeline {
     // default (e35/e38 pin the historical stage list).
     val docs0 = unicodeForm match {
       case Some(form) =>
-        graft.functions.GraftFunctions.register(docs.sparkSession)
         docs.withColumn(textCol, TextOps.normalizeUnicode(col(textCol), form))
       case None => docs
     }

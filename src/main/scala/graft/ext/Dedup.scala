@@ -63,7 +63,6 @@ object Dedup {
     * perturb minima, so no distinct pass is needed. */
   def withMinhashSignature(df: DataFrame, text: Column, k: Int = 32,
       shingleWidth: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("mh_sig",
       call_function("graft_minhash", shingleHashes(text, shingleWidth), lit(k)))
   }
@@ -201,7 +200,6 @@ object Dedup {
     * exchange (the per-doc min agg, map-side partial). */
   private[ext] def portableSignatures(df: DataFrame, idCol: String,
       textCol: String, k: Int, shingleWidth: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val fam = portableFamily(k)
     // r21 note: an Adaptive.fanOutSmall here was MEASURED SLOWER on the
     // pipeline queries (e27/e35/e38 +0.6-1.7 s): the shingle front's
@@ -309,37 +307,9 @@ object Dedup {
     graft.streaming.ExactlyOnce.generationHistory(fs, anchor)
   }
 
-  /** Compact an appended index into a fresh one at `outDir` WITHOUT
-    * re-hashing any text: the persisted signatures are the source of
-    * truth (band keys re-derive from them, fingerprints and meta copy),
-    * so a corpus that took a full linear text pass to index compacts in
-    * index-size time. Closes the two accumulation debts of the append
-    * path in one move: the per-append generation dirs fold into base
-    * tables (bounded file count again), and the build-time `maxBucket`
-    * prune re-applies over the GLOBAL bucket counts — appended band
-    * keys bypass it (documented on [[appendToDedupIndex]]), so a
-    * boilerplate bucket that grew past the bound across many appends is
-    * dropped here exactly as a fresh build would drop it.
-    *
-    * Output is equivalent to `buildDedupIndex` over the full corpus
-    * (spec-proven: the portable signature chain is deterministic).
-    *
-    * This flavor EXPORTS to `outDir` — a standalone fresh index the
-    * caller promotes however it likes (useful for copying an index to a
-    * new location). For in-place maintenance prefer the one-dir
-    * overload, which stages the fold as a generation under the SAME
-    * index dir and promotes it with one atomic ledger PUT — no
-    * caller-owned swap, no crash window between compact and promote. */
-  def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, outDir: String): Unit = {
-    val idx = loadDedupIndex(spark, dir) // base ∪ committed generations
-    writeCompacted(spark, idx, outDir)
-  }
-
-  /** Write the folded tables of `idx` to `outDir` (shared body of both
-    * compaction flavors; see [[compactDedupIndex]] for the fold's
-    * semantics — signatures are the source of truth, band keys
-    * re-derive under the GLOBAL `maxBucket` prune, no text re-hash). */
+  /** Write the folded tables of `idx` to `outDir` — signatures are the
+    * source of truth, band keys re-derive under the GLOBAL `maxBucket`
+    * prune, no text re-hash (see [[compactDedupIndex]]). */
   private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
       idx: DedupIndex, outDir: String): Unit = {
     import spark.implicits._
@@ -362,7 +332,21 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$outDir/meta"))
   }
 
-  /** IN-PLACE crash-safe compaction: fold the base tables and every
+  /** Compact an appended index WITHOUT re-hashing any text: the
+    * persisted signatures are the source of truth (band keys re-derive
+    * from them, fingerprints and meta copy), so a corpus that took a
+    * full linear text pass to index compacts in index-size time. Closes
+    * the two accumulation debts of the append path in one move: the
+    * per-append generation dirs fold into one (bounded file count
+    * again), and the build-time `maxBucket` prune re-applies over the
+    * GLOBAL bucket counts — appended band keys bypass it (documented on
+    * [[appendToDedupIndex]]), so a boilerplate bucket that grew past the
+    * bound across many appends is dropped here exactly as a fresh build
+    * would drop it. The result is equivalent to `buildDedupIndex` over
+    * the full corpus (spec-proven: the portable signature chain is
+    * deterministic).
+    *
+    * IN-PLACE and crash-safe: fold the base tables and every
     * committed append generation into ONE new generation under the same
     * index dir, marked as a COMPACTION
     * ([[graft.streaming.ExactlyOnce.markCompaction]]), and promote it
@@ -694,9 +678,7 @@ object Dedup {
     * vote/sign loop are both native codegen'd expressions
     * ([[graft.functions.TokenHashes]] → [[graft.functions.SimHash64]]);
     * the HOF formulation (`transform(split(text," "), xxhash64)`)
-    * would force the whole stage to interpreted eval. Callers must have
-    * registered [[graft.functions.GraftFunctions]] (the ops in this
-    * object do). */
+    * would force the whole stage to interpreted eval. */
   def simhash64(text: Column): Column =
     call_function("graft_simhash64", call_function("graft_token_hashes", text))
 
@@ -723,7 +705,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       chunks: Int = 4, maxHamming: Int = 3,
       simhashCol: Column => Column = simhash64): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val width = 64 / chunks
     val sh = df.select(col(idCol).as("doc"), simhashCol(col(textCol)).as("sh"))
     val chunkCols = (0 until chunks).map { c =>
@@ -999,7 +980,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, sourceCol: String,
       evalSource: String, trainSource: String,
       shingleWidth: Int = 3, threshold: Double = 0.2): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
     // distinct (doc, shingle) pairs: duplicate doc-id rows (same id, any
     // text) contribute ONE set per id, matching the oracle's
@@ -1072,7 +1052,6 @@ object Dedup {
       evalSource: String, trainSource: String,
       shingleWidth: Int = 3, threshold: Double = 0.0,
       estItems: Long = 1L << 20, numBits: Long = 1L << 23): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
     def bloomOf(sh: DataFrame): Array[Byte] = sh
       .agg(call_function("graft_bloom_agg",
@@ -1130,7 +1109,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, threshold: Double = 0.5,
       maxDf: Int = 10000): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
     val sizes = df.select(col(idCol).as("doc"), size(hashes).as("n"))
     val tok = df.select(col(idCol).as("doc"), explode(hashes).as("sh"))
@@ -1260,7 +1238,6 @@ object Dedup {
       k: Int = 5, minDf: Int = 2, trimAt: Double = 0.5): DataFrame = {
     require(k > 0 && minDf >= 2 && trimAt >= 0.0,
       s"span geometry out of range: k=$k minDf=$minDf trimAt=$trimAt")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // one fingerprint per window POSITION (multiset, unlike [[shingles]]'
     // distinct set): coverage counts positions, so a doc that repeats a
     // shared span twice is twice as covered

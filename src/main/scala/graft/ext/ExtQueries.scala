@@ -530,7 +530,6 @@ object ExtQueries {
   val e16 = Q(
     "e16_subword_classes",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       TextOps.subwordClasses(T.documents(s, d), "doc_id", "text")
         .orderBy(col("doc_id"))
     },
@@ -2485,7 +2484,6 @@ object ExtQueries {
   val e66 = Q(
     "e66_unicode_nfc",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val decomposed = concat(substring(col("text"), 1, 24), lit(" cafe\u0301 nai\u0308ve"))
       val norm = TextOps.normalizeUnicode(decomposed)
       T.documents(s, d).select(
@@ -2565,7 +2563,6 @@ object ExtQueries {
     "e68_stream_kmv_distinct",
     (outer, d) => {
       val s = graft.streaming.StateBackend.isolatedStreamSession(outer)
-      graft.functions.GraftFunctions.register(s)
       def src = graft.streaming.StreamQueries.eventStream(s, d)
       val hashed = src.union(src).select(col("event_type"),
         Cardinality.portableStringHash(col("user_id")).as("h"))
@@ -2655,7 +2652,6 @@ object ExtQueries {
   val e70 = Q(
     "e70_topk_per_group",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       T.documents(s, d)
         .groupBy(col("source"))
         .agg(call_function("graft_topk", col("n_chars"), col("doc_id"), lit(3)).as("top"))
@@ -2762,7 +2758,6 @@ object ExtQueries {
     "e73_stream_kmv_daily",
     (outer, d) => {
       val s = graft.streaming.StateBackend.isolatedStreamSession(outer)
-      graft.functions.GraftFunctions.register(s)
       def src = graft.streaming.StreamQueries.eventStream(s, d)
       val hashed = src.union(src).select(col("event_type"), col("ts"),
         Cardinality.portableStringHash(col("user_id")).as("h"))

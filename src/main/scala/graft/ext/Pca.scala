@@ -329,7 +329,6 @@ object Pca {
     * formulation of the same fold benched exactly linear at the
     * sf1→sf10 anchor; the native loop is the DotProductF32 rule.) */
   def project(df: DataFrame, vecCol: String, model: PcaModel): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val qv = quantizeMicros(col(vecCol))
     def score(v: Array[Double]): Column = call_function("graft_pca_project",
       qv, typedLit(model.mean.toSeq), typedLit(v.toSeq))

@@ -34,8 +34,7 @@ object Similarity {
 
   /** Same fold, as the codegen'd native expression
     * [[graft.functions.DotProductF32]] — bit-identical result, ~10×
-    * faster inside pair joins. Requires [[graft.functions.GraftFunctions
-    * .register]] (the ops below self-register on their input's session). */
+    * faster inside pair joins. */
   def fastDot(a: Column, b: Column): Column =
     call_function("graft_dot_f32", a, b)
 
@@ -58,7 +57,6 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qe"),
       l2norm(col(vecCol)).as("qn"))
     val scored = corpus.select(col(idCol), col(vecCol), l2norm(col(vecCol)).as("cn"))
@@ -89,7 +87,6 @@ object Similarity {
   def filteredBruteTopK(
       corpus: DataFrame, queries: DataFrame, k: Int, filterCol: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("qid"), col(filterCol).as("__fq"),
       col(vecCol).as("qe"), l2norm(col(vecCol)).as("qn"))
     val scored = corpus
@@ -184,15 +181,6 @@ object Similarity {
       (math.round(rnd.nextGaussian() * 4096.0) / 4096.0).toFloat))
   }
 
-  /** Sign-pattern LSH bucket id of a vector column — `planes` fused
-    * codegen'd dot products per row, no intermediate arrays. */
-  def lshBucket(vec: Column, planes: Seq[Seq[Float]]): Column = {
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      when(fastDot(typedLit(p), vec) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }
-    bits.reduce(_.bitwiseOR(_)).as("bucket")
-  }
-
   /** Approximate top-k via multi-table hyperplane LSH (the banding
     * construction): `tables` independent hyperplane sets, a vector lands
     * in one bucket per table, candidates are the union over tables of
@@ -212,7 +200,6 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame, k: Int,
       planes: Int = 8, dim: Int = 64, tables: Int = 4, probes: Boolean = true,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val matrix: Seq[Float] =
       (0 until tables).flatMap(t => hyperplanes(planes, dim, 42L + t).flatten)
     def buckets(vec: Column): Column = call_function("graft_lsh_buckets",
@@ -317,7 +304,6 @@ object Similarity {
   private[ext] def lloydAssign(corpus: DataFrame, nlist: Int,
       lloydIters: Int, idCol: String, vecCol: String,
       literalNlistMax: Int): (Array[(Int, Seq[Float], Double)], Boolean, DataFrame) = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Deterministic pseudo-random draw: smallest nlist ids by hash order.
     // TakeOrderedAndProject keeps this a narrow top-k at any corpus size.
     val picked = corpus
@@ -557,7 +543,6 @@ object Similarity {
     * integer dot products ≤ 64·127² stay exact in the f64 fold. */
   def quantizeInt8(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // q via the native codegen'd expression (graft.functions.QuantizeI8):
     // the transform-HOF formulation fell out of whole-stage codegen and
     // re-ran interpreted on every consumer scan (3× in the e34 IVF
@@ -590,7 +575,6 @@ object Similarity {
       corpus: DataFrame, threshold: Double,
       planes: Int = 8, dim: Int = 64, tables: Int = 8, maxBucket: Int = 1000,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val matrix: Seq[Float] =
       (0 until tables).flatMap(t => hyperplanes(planes, dim, 42L + t).flatten)
     val b = corpus.select(col(idCol).as("id"), col(vecCol).as("e"),
@@ -638,7 +622,6 @@ object Similarity {
   def cosineDupPairs(
       corpus: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val n = corpus.select(col(idCol), col(vecCol), l2norm(col(vecCol)).as("nrm"))
     val a = n.select(col(idCol).as("id1"), col(vecCol).as("e1"), col("nrm").as("n1"))
     val b = n.select(col(idCol).as("id2"), col(vecCol).as("e2"), col("nrm").as("n2"))
@@ -704,7 +687,6 @@ object Similarity {
   private[ext] def trainIvfPq(
       corpus: DataFrame, nlist: Int, m: Int, ksub: Int, pqIters: Int,
       idCol: String, vecCol: String): IvfPqModel = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     require(nlist > 0 && m > 0 && ksub > 0 && ksub <= nlist,
       s"ivfpq geometry out of range: nlist=$nlist m=$m ksub=$ksub")
     val picked = corpus
@@ -933,7 +915,6 @@ object Similarity {
     * generation by construction. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       asOfGen: Option[Long] = None): IvfPqIndex = {
-    graft.functions.GraftFunctions.register(spark)
     val anchor = codesAnchor(path)
     val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // §2.6 overlap: the model side is three ONE-FILE parquet tables —
@@ -1045,39 +1026,20 @@ object Similarity {
     ExactlyOnce.commitLedger(fs, anchor, id)
   }
 
-  /** Compact an appended index into a fresh one at `outPath` WITHOUT
-    * retraining: the model tables (centroids, codebooks, meta) copy
-    * through byte-identical in meaning, and the codes union (base +
-    * committed generations) rewrites as ONE `cid=`-partitioned table —
-    * the per-append generation dirs fold away, restoring the bounded
-    * file count and single-scan serve plan of a fresh build. Serving
-    * results are unchanged by construction (same model, same codes).
+  /** Compact an appended index WITHOUT retraining: the model tables
+    * (centroids, codebooks, meta) are immutable and stay at `path`, and
+    * only the codes fold, restoring the bounded file count and
+    * single-scan serve plan of a fresh build. Serving results are
+    * unchanged by construction (same model, same codes).
     *
-    * This flavor EXPORTS a standalone index to `outPath`; for in-place
-    * maintenance prefer the one-dir overload — atomic ledger promote,
-    * no caller-owned directory swap. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, outPath: String): Unit = {
-    val idx = loadIndex(spark, path)
-    ConcurrentActions.inParallel(
-      (() => clusterByCell(idx.codes
-        .select(col(idx.idCol), col("packed"), col("__rnorm").as("rnorm"), col("cid")),
-        idx.model.nlist)
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$outPath/codes")) +:
-      Seq("centroids", "codebooks", "meta").map(t =>
-        () => spark.read.parquet(s"$path/$t")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outPath/$t")): _*)
-  }
-
-  /** IN-PLACE crash-safe compaction: fold the codes base and every
+    * IN-PLACE and crash-safe: fold the codes base and every
     * committed generation into one new `cid=`-partitioned COMPACTION
     * generation under the same index dir, promoted by a single atomic
-    * ledger PUT (the [[graft.ext.Dedup.compactDedupIndex]] one-dir
+    * ledger PUT (the [[graft.ext.Dedup.compactDedupIndex]]
     * discipline — see there for the crash windows: pre-PUT crashes are
-    * invisible, re-entry re-stages, torn PUTs repair). The model tables
-    * (centroids/codebooks/meta) are immutable and stay at `path`; only
-    * the codes table folds. Subsumed dirs remain for pre-compaction
-    * readers until [[vacuumIndex]]. Single-maintainer contract. */
+    * invisible, re-entry re-stages, torn PUTs repair). Subsumed dirs
+    * remain for pre-compaction readers until [[vacuumIndex]].
+    * Single-maintainer contract. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import graft.streaming.ExactlyOnce

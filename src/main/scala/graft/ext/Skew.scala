@@ -125,7 +125,6 @@ object Skew {
     * e65/e75 oracle arithmetic): n_rows / null_rows / d_est / f2_est
     * plus the two derived decision signals. */
   def measureFrame(df: DataFrame, key: String, k: Int = 256): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // one native digest per row projected as the [kmv, slice0..3] vector
     // (r21 — see Cardinality.md5Sketch); NULL key → NULL vector. This
     // entry point takes ARBITRARY key columns (the sync loader measures

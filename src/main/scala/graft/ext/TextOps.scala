@@ -20,9 +20,7 @@ object TextOps {
   /** Unicode normalization (UAX #15) via the codegen'd
     * [[graft.functions.UnicodeNormalize]] expression — the canonical
     * first pass before any fingerprint/tokenize stage, so visually
-    * identical strings ("é" composed vs "e"+U+0301) hash identically.
-    * Caller must have registered graft functions on the session (every
-    * declared-query entry point does). */
+    * identical strings ("é" composed vs "e"+U+0301) hash identically. */
   def normalizeUnicode(text: Column, form: String = "NFC"): Column =
     call_function("graft_unicode_norm", text, lit(form))
 
@@ -44,10 +42,6 @@ object TextOps {
     * [[subwordClassesRegex]] keeps the regex formulation for the
     * property spec. Map-only. */
   def subwordClasses(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // self-register the native function (idempotent) — this helper was
-    // registration-free before the native swap, and callers outside the
-    // declared queries shouldn't inherit a new precondition (ADVICE r19)
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val c = call_function("graft_subword_classes", col(textCol))
     df.select(
       col(idCol),
@@ -205,7 +199,6 @@ object TextOps {
     * xxhash64 collision (~2⁻⁶⁴ per pair) could over-count by one; the
     * DuckDB oracle builds the n-gram strings themselves and confirms. */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     def dupFrac(n: Int): Column = {
       val sh = call_function("graft_shingle_hashes", col(textCol), lit(n))
       (size(sh) - size(array_distinct(sh))).cast(DoubleType) / size(sh)
@@ -466,7 +459,6 @@ object TextOps {
   def noveltyScore(docs: DataFrame, idCol: String, textCol: String,
       scale: Long = 1000000L): DataFrame = {
     require(scale > 0, s"novelty scale must be positive, got $scale")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val grams = docs
       .select(col(idCol),
         explode(call_function("graft_shingle_hashes", col(textCol), lit(2))).as("gram"))
@@ -750,15 +742,6 @@ object TextOps {
   def fingerprint(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), md5(col(textCol).cast(BinaryType)).as("fp"),
       length(col(textCol)).cast(LongType).as("n_chars_calc"))
-
-  /** Rolling-hash shingle fingerprint (winnowing-lite): the minimum
-    * shingle hash per document — cheap near-dup prefilter. Not oracle-
-    * declarable (xxhash64 is engine-specific); covered by tests. */
-  def minShingleHash(df: DataFrame, idCol: String, textCol: String,
-      shingleWidth: Int = 3): DataFrame =
-    df.select(col(idCol),
-      array_min(transform(Dedup.shingles(col(textCol), shingleWidth),
-        s => xxhash64(s))).as("min_shingle_hash"))
 
   /** Sequence packing — the step between chunking ([[chunk]]) and the
     * trainer: group chunks into fixed token-budget training sequences

@@ -1,18 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Registration for the engine's native expressions — both wiring
-  * styles Spark supports:
+/** The engine's native expressions, wired into a session by ONE path:
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, which
+  * [[graft.etl.Sessions.builder]] always sets. The extension is a static
+  * conf of the SparkContext, so every session of that context carries
+  * the functions — `newSession()` and a session rebuilt by a bare
+  * builder's `getOrCreate()` included — with no registration call.
   *
-  *  - `spark.sql.extensions=graft.GraftExtensions` at session build
-  *    (the SparkSessionExtensions path, used by Main);
-  *  - [[GraftFunctions.register]] on a live session (idempotent; called
-  *    by query entry points so the library works on any session).
+  * A session built outside this repo (a notebook, `spark-submit`,
+  * another application) must set that conf before its SparkContext
+  * starts (e.g. `--conf spark.sql.extensions=graft.functions.GraftExtensions`).
+  * Without it the first operator that uses one fails at analysis with
+  * `UNRESOLVED_ROUTINE` naming the `graft_*` function.
   *
-  * Either way `graft_dot_f32(a, b)` becomes available to SQL and to
+  * `graft_dot_f32(a, b)` and the rest are then available to SQL and to
   * `call_function` in the DataFrame API.
   */
 object GraftFunctions {
@@ -289,13 +294,6 @@ object GraftFunctions {
     }
     (books, ints)
   }
-
-  /** Idempotent runtime registration into the session's function
-    * registry. */
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 
   private[functions] def inject(ext: SparkSessionExtensions): Unit =
     fns.foreach(ext.injectFunction(_))

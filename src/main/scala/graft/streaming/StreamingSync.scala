@@ -49,19 +49,6 @@ object StreamingSync {
       .withWatermark(tsCol, withinWatermark)
       .dropDuplicatesWithinWatermark(idCols)
 
-  /** Tumbling-window cost aggregation (the D3 daily-trend shape, kept
-    * current incrementally instead of recomputed from the full table). */
-  def windowedCosts(normalized: DataFrame, window_ : String = "1 day",
-      watermark: String = "1 day"): DataFrame =
-    normalized
-      .withColumn("event_ts", col("date").cast("timestamp"))
-      .withWatermark("event_ts", watermark)
-      .groupBy(window(col("event_ts"), window_), col("service"))
-      .agg(sum(col("cost").cast("decimal(38,6)")).cast("double").as("total"),
-        count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("service"),
-        col("total"), col("n"))
-
   /** Session-window activity per account: gaps > `gap` close a session
     * (usage burst detection — no batch equivalent in the reference). */
   def accountSessions(events: DataFrame, tsCol: String, keyCol: String,

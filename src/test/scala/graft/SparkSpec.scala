@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM under Test/fork). Config
-  * matches Verify/Bench: UTC, ANSI on, nanos legacy read. */
+/** Shared local session for all suites (one JVM under Test/fork), built
+  * by the same factory as the runners and the CLI ([[etl.Sessions]]). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
@@ -12,23 +12,11 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // matches the runner sessions (r22): AQE may re-size cached-plan
-      // partitions, so the plan-asserted invariants test what ships
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = etl.Sessions.builder()
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // native graft_* expressions available to every suite (idempotent —
-    // the same registration every declared-query entry point performs)
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -132,7 +132,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native shingle/token hashes equal the HOF formulation element-for-element") {
-    graft.functions.GraftFunctions.register(spark)
     // shingle ranges: hashing the byte range must equal hashing the
     // concat_ws-joined words (single-space separators reproduce bytes)
     val shMismatch = docs.select(
@@ -155,7 +154,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native portable word hashes equal the HOF md5 formulation element-for-element") {
-    graft.functions.GraftFunctions.register(spark)
     val mismatch = docs.select(
       call_function("graft_portable_words", col("text")).as("nat"),
       transform(split(col("text"), " "), w => Dedup.portableHash64(w)).as("hof"))
@@ -173,7 +171,6 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("native 60-bit window hashes equal the HOF md5 formulation element-for-element") {
-    graft.functions.GraftFunctions.register(spark)
     val k = 5
     // the oracle-side formulation: space-joined k-token windows (short
     // docs collapse to one whole-text window via the concat_ws NULL
@@ -608,7 +605,6 @@ class DedupSimilaritySpec extends SparkSpec {
     val hof = when(ma === 0.0, transform(col("embedding"), _ => lit(0f)))
       .otherwise(transform(col("embedding"),
         x => (xd(x) * 127.0 / ma).cast(IntegerType).cast(FloatType)))
-    graft.functions.GraftFunctions.register(spark)
     val nullF = lit(null).cast(FloatType)
     val edgeVecs = spark.range(1).select(lit(9999L).as("vec_id"),
       array(lit(0f), lit(-0f), lit(0f)).as("embedding"))
@@ -743,14 +739,12 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(ExactlyOnce.lastCommitted(fs, anchor).contains(1L))
     assert(Similarity.loadIndex(spark, dir).codes.count() == 500)
     // compaction folds both generations into one codes table with
-    // identical serving results and no append anchor
-    val cdir = java.nio.file.Files.createTempDirectory("graft_idx_cmp").toString
-    Similarity.compactIndex(spark, dir, cdir)
-    val cidx = Similarity.loadIndex(spark, cdir)
-    assert(cidx.codes.count() == 500)
-    assert(!new java.io.File(s"$cdir/codes_appends__stream_commits").exists())
+    // identical serving results
     val before = Similarity.queryIndex(Similarity.loadIndex(spark, dir),
       probe, k = 5, nprobe = 8).collect().toSeq
+    Similarity.compactIndex(spark, dir)
+    val cidx = Similarity.loadIndex(spark, dir)
+    assert(cidx.codes.count() == 500)
     val after = Similarity.queryIndex(cidx, probe, k = 5, nprobe = 8).collect().toSeq
     assert(after == before, "compaction must not change serving results")
   }
@@ -952,13 +946,12 @@ class DedupSimilaritySpec extends SparkSpec {
     Dedup.buildDedupIndex(corpus, "doc_id", "text", dir, maxBucket = 7)
     Dedup.appendToDedupIndex(g1, "doc_id", "text", dir)
     Dedup.appendToDedupIndex(g2, "doc_id", "text", dir)
-    val out = java.nio.file.Files.createTempDirectory("graft_dedup_cmp_b").toString
-    Dedup.compactDedupIndex(spark, dir, out)
+    Dedup.compactDedupIndex(spark, dir)
     // reference: a fresh build over the full corpus (deterministic chain)
     val fresh = java.nio.file.Files.createTempDirectory("graft_dedup_cmp_c").toString
     Dedup.buildDedupIndex(corpus.union(g1).union(g2), "doc_id", "text",
       fresh, maxBucket = 7)
-    val a = Dedup.loadDedupIndex(spark, out)
+    val a = Dedup.loadDedupIndex(spark, dir)
     val b = Dedup.loadDedupIndex(spark, fresh)
     assert(a.meta == b.meta)
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
@@ -968,8 +961,9 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(rows(a.bandKeys) == rows(b.bandKeys),
       "band keys diverge — compaction must re-apply the global maxBucket prune")
     // the prune actually bit: the appended union has at least one bucket
-    // over the bound that the UNCOMPACTED index still carries
-    val uncompacted = Dedup.loadDedupIndex(spark, dir)
+    // over the bound that the pre-compaction snapshot (through the second
+    // append, generation 1) still carries
+    val uncompacted = Dedup.loadDedupIndex(spark, dir, asOfGen = Some(1L))
     assert(uncompacted.bandKeys.count() > a.bandKeys.count(),
       "expected the global prune to drop accumulated boilerplate buckets")
   }

@@ -35,7 +35,6 @@ class CmsSketchSpec extends SparkSpec {
   }
 
   test("property: aggregate grid equals the reference at random bags/partitionings") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val gen = for {
       n <- Gen.choose(1, 200)

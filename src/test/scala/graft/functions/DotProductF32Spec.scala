@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class DotProductF32Spec extends SparkSpec {
 
   test("bit-identical to the higher-order-function fold on real embeddings") {
-    GraftFunctions.register(spark)
     val embs = T.embeddings(spark, sf001).limit(200)
     val both = embs.select(
       Similarity.dot(col("embedding"), col("embedding")).as("hof"),
@@ -21,7 +20,6 @@ class DotProductF32Spec extends SparkSpec {
   }
 
   test("registered for SQL: graft_dot_f32 callable from spark.sql") {
-    GraftFunctions.register(spark)
     T.embeddings(spark, sf001).createOrReplaceTempView("emb_fn_test")
     val v = spark.sql(
       """SELECT graft_dot_f32(embedding, embedding) AS d
@@ -31,7 +29,6 @@ class DotProductF32Spec extends SparkSpec {
   }
 
   test("null array input yields null, not a crash") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1, Some(Seq(1.0f, 2.0f)), None: Option[Seq[Float]]))
       .toDF("id", "a", "b")
@@ -40,7 +37,6 @@ class DotProductF32Spec extends SparkSpec {
   }
 
   test("native expressions actually reach whole-stage codegen in a fresh plan") {
-    GraftFunctions.register(spark)
     val embs = T.embeddings(spark, sf001)
     val dotPlan = embs.select(
       Similarity.fastDot(col("embedding"), col("embedding")).as("d"))

@@ -42,7 +42,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("property: aggregate over arbitrary multisets/partitionings equals the literal k-smallest-distinct") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val gen = for {
       n <- Gen.choose(1, 300)
@@ -63,7 +62,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("plan: KMV groupBy runs as ObjectHashAggregate with a map-side partial phase") {
-    GraftFunctions.register(spark)
     val plan = Cardinality.kmvDistinctTokens(T.documents(spark, sf001), "source", "text", 64)
       .queryExecution.executedPlan.toString()
     assert(plan.contains("ObjectHashAggregate"), s"expected object hash agg:\n$plan")
@@ -75,7 +73,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("estimator: within 15% of truth on 20k uniform distinct values at k=256") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // deterministic pseudo-uniform 60-bit hashes via splitmix-style mix
     val vals = (1 to 20000).map { i =>
@@ -122,7 +119,6 @@ class KmvSketchSpec extends SparkSpec {
   test("streaming: sketch state merged across micro-batches == one batch aggregation") {
     import spark.implicits._
     val s = graft.streaming.StateBackend.isolatedStreamSession(spark)
-    GraftFunctions.register(s)
     // 3 slice files, heavy cross-slice value overlap, k saturated (16 of
     // 90 distinct per group) so eviction/merge runs in EVERY batch
     val rows = (0 until 600).map(i => (s"g${i % 3}", (i % 90).toLong + 1))
@@ -241,7 +237,6 @@ class KmvSketchSpec extends SparkSpec {
     // a raw signed hash (xxhash64) sorts its negative half first and
     // yields a negative k-th minimum — nonsense estimates with no error.
     // update() must refuse instead.
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq("a", "b", "c").toDF("s")
         .agg(call_function("graft_kmv", xxhash64(col("s")), lit(16)))

@@ -15,7 +15,6 @@ class PqCodesSpec extends SparkSpec {
   // subspace 1 codewords (2,0),(0,2)
   private val books = Seq(1f, 0f, 0f, 1f, 2f, 0f, 0f, 2f)
   private def call(fn: String, vec: org.apache.spark.sql.Column) = {
-    GraftFunctions.register(spark)
     call_function(fn, vec, typedLit(books), lit(2), lit(2), lit(2))
   }
 
@@ -54,7 +53,6 @@ class PqCodesSpec extends SparkSpec {
     Iterator.iterate(seed0)(_.next).take(10).foreach { seed =>
       Gen.zip(bookGen, vecGen).apply(Gen.Parameters.default, seed).foreach {
         case (bk, v) =>
-          GraftFunctions.register(spark)
           val df = spark.range(1).select(typedLit(v).as("v"))
           def f(fn: String) = call_function(fn, col("v"), typedLit(bk),
             lit(m), lit(ksub), lit(dsub))

@@ -43,7 +43,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("property: aggregate equals the window formulation at random multisets") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val gen = for {
       n <- Gen.choose(1, 250)
@@ -65,7 +64,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("plan: ObjectHashAggregate partial/final, no WindowExec, no sort before the exchange") {
-    GraftFunctions.register(spark)
     val df = T.documents(spark, sf001)
       .groupBy(col("source"))
       .agg(call_function("graft_topk", col("n_chars"), col("doc_id"), lit(3)).as("t"))

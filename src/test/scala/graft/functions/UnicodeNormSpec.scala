@@ -14,7 +14,6 @@ class UnicodeNormSpec extends SparkSpec {
   private val composed = "café naïve Å"
 
   test("NFC composes combining sequences; NFD inverts it; K-forms fold compatibility chars") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((decomposed, "ﬁ ①")).toDF("d", "k") // fi-ligature, circled one
     val r = df.select(
@@ -35,7 +34,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("property: equals java.text.Normalizer on random combining-mark strings") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val charGen = Gen.frequency(
       (6, Gen.alphaChar),
@@ -53,7 +51,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("null input yields null; unknown form fails registration loudly") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val r = Seq(Option.empty[String]).toDF("s")
       .select(call_function("graft_unicode_norm", col("s"), lit("NFC")).as("n"))
@@ -69,7 +66,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("reaches whole-stage codegen in a fresh plan") {
-    GraftFunctions.register(spark)
     val plan = graft.Tables.documents(spark, sf001)
       .select(call_function("graft_unicode_norm", col("text"), lit("NFC")).as("n"))
     val code = org.apache.spark.sql.execution.debug.codegenString(

@@ -59,7 +59,6 @@ class ValueHashSpec extends SparkSpec {
     // the e71 shape: the hash as graft_kmv's input expression, evaluated
     // interpreted inside ObjectHashAggregate — parity with the literal
     // chain aggregated the same way
-    GraftFunctions.register(spark)
     val df = (1L to 5000L).toDF("v")
     val a = df.agg(call_function("graft_kmv",
       graft.ext.Cardinality.portableStringHash(col("v")), lit(64)).as("s"))
