@@ -322,7 +322,10 @@ object ExactlyOnce {
     * run. Returns true when the batch was written, false when it was a
     * replay of an already-committed id (skipped — the exactly-once
     * case). A torn ledger is repaired here by construction: the
-    * replayed batch rewrites its own dir and re-commits its id. */
+    * replayed batch rewrites its own dir and re-commits its id.
+    * The emptiness probe and the write each execute `batch`'s plan, so
+    * a caller with a stateful or expensive upstream passes a persisted
+    * frame (as [[graft.ext.CorpusPipeline.ingestBatch]] does). */
   def commitBatch(batch: DataFrame, baseDir: String, batchId: Long): Boolean = {
     val base = new HPath(baseDir)
     val fs = base.getFileSystem(

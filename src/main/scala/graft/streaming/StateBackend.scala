@@ -81,10 +81,11 @@ object StateBackend {
   /** Isolated session for a streaming query: shared SparkContext, own
     * SQLConf, with (a) streaming-state-sized shuffle partitioning —
     * each stateful operator keeps one store PER shuffle partition, and a
-    * stream-stream join keeps two, so the batch suite's 32 partitions
-    * would mean 64 store lifecycles per micro-batch of a bounded drain —
-    * and (b) the RocksDB state backend. Output content is
-    * partitioning-independent; only state geometry changes. */
+    * stream-stream join keeps two, so the factory's one partition per
+    * core ([[graft.etl.Sessions]]: `shuffle.partitions` = cpus) would
+    * mean 2 × cpus store lifecycles per micro-batch of a bounded drain
+    * on a many-core driver — and (b) the RocksDB state backend. Output
+    * content is partitioning-independent; only state geometry changes. */
   // NOTE (r22): deriving this count from source size was tried and
   // REVERTED — an 8/2/1 sweep over the bounded drains read mixed
   // (c47 2.35→2.68→3.48: its dedup work is CPU-bound and wants the

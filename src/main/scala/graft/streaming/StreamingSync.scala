@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Structured Streaming track — the reference names streaming as an
   * explicit TODO (reference CLAUDE.md:133 "stream results instead of
@@ -22,6 +23,8 @@ import org.apache.spark.sql.types.StructType
   *    cluster;
   *  - `foreachBatch` reuses the batch [[Loader]] (append mode), so the
   *    serving contract is identical for batch and streaming ingestion;
+  *    each micro-batch executes once (persisted, then its raw and
+  *    normalized appends overlap — see [[incrementalSync]]);
   *  - `Trigger.AvailableNow` gives the cron semantics (drain everything
   *    new, then stop) with streaming exactly-once bookkeeping.
   */
@@ -64,7 +67,20 @@ object StreamingSync {
   /** Incremental sync: normalize each micro-batch with the batch
     * transform and append through the batch loader — one code path for
     * both ingestion modes. Returns the writer (caller starts it with
-    * its checkpoint dir). */
+    * its checkpoint dir).
+    *
+    * One execution per micro-batch: the batch is persisted
+    * (`MEMORY_AND_DISK`) before any action, so its scan, shuffle and
+    * stateful operators (a [[dedupedEvents]] RocksDB store) run once,
+    * not once per action. The `raw_<table>` and `<table>_normalized`
+    * appends both read that copy and run concurrently
+    * ([[graft.ext.ConcurrentActions.inParallel]]), so their job launch
+    * and commit costs overlap. An empty batch (the drain's trailing
+    * no-data batch, a restart with nothing new) writes nothing: each
+    * [[Loader.load]] short-circuits empty input itself. Delivery stays
+    * at-least-once: a replayed batch appends the same rows again, and
+    * a failing append fails the query only after the other append has
+    * run to completion. */
   def incrementalSync(
       raw: DataFrame,
       loader: Loader,
@@ -74,13 +90,15 @@ object StreamingSync {
     raw.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          loader.load(batch, s"raw_$table", ifExists = "append")
-          loader.load(
-            Normalize.normalize(batch, Normalize.awsCur, table, lit(syncTs)),
-            s"${table}_normalized", ifExists = "append")
-        }
-        ()
+        val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        try graft.ext.ConcurrentActions.inParallel(
+          () => { loader.load(b, s"raw_$table", ifExists = "append"); () },
+          () => {
+            loader.load(Normalize.normalize(b, Normalize.awsCur, table, lit(syncTs)),
+              s"${table}_normalized", ifExists = "append")
+            ()
+          })
+        finally { b.unpersist(blocking = false); () }
       }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Streaming capability tests (SURVEY §5.2.5): MemoryStream-driven,
   * bounded/behavioral assertions (not hash-declared — SURVEY §2.3 rules
@@ -144,6 +145,144 @@ class StreamingSyncSpec extends SparkSpec {
       ckpt).start()
     q2.awaitTermination(60000)
     assert(loader.table(spark, "raw_cur_a").count() == 2, "checkpoint replayed files")
+  }
+
+  /** Three daily CUR drops, one file each, drained one file per
+    * micro-batch: drop 2 re-issues 10 line items of drop 1 and drop 3
+    * re-issues 10 of drop 2 (with their original usage times, so they
+    * are duplicates, not late rows). 120 distinct ids, 20 re-issued. */
+  private def reissuedDrops(): (String, Long, Long) = {
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft_stream_reissue").toString
+    def rows(day: Int, ids: Range) = ids.map(i =>
+      (s"li-$i", Timestamp.valueOf(f"2024-01-0$day%d 00:00:00").getTime + i * 60000L))
+    val drops = Seq(
+      rows(1, 0 until 40),
+      rows(2, 40 until 80) ++ rows(1, 30 until 40),
+      rows(3, 80 until 120) ++ rows(2, 70 until 80))
+    val now = System.currentTimeMillis()
+    drops.zipWithIndex.foreach { case (d, k) =>
+      val dir = s"$src/drop$k"
+      d.map { case (id, t) => (id, new Timestamp(t), "111111111111", 1.0) }
+        .toDF("identity_line_item_id", "line_item_usage_start_date",
+          "line_item_usage_account_id", "line_item_unblended_cost")
+        .coalesce(1).write.parquet(dir)
+      // the file source orders by modification time: pin drop order
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+        .foreach(_.setLastModified(now - (drops.size - k) * 10000L))
+    }
+    (src, 120L, 20L)
+  }
+
+  private def readDrops(src: String) = spark.readStream
+    .schema(spark.read.option("recursiveFileLookup", "true").parquet(src).schema)
+    .option("recursiveFileLookup", "true").option("maxFilesPerTrigger", 1)
+    .parquet(src)
+
+  private def dedupedSync(src: String, loader: graft.etl.Loader, ckpt: String) =
+    StreamingSync.availableNow(StreamingSync.incrementalSync(
+      StreamingSync.dedupedEvents(readDrops(src), "line_item_usage_start_date",
+        Seq("identity_line_item_id"), "1 day"),
+      loader, "cur", ts("2024-06-01T00:00:00Z")), ckpt).start()
+
+  /** A [[graft.etl.Loader]] that runs each `load` through `around`,
+    * given the table name and the wrapped call. */
+  private class Around(inner: graft.etl.Loader)(around: (String, () => Long) => Long)
+      extends graft.etl.Loader {
+    def ensureNamespace(): Unit = inner.ensureNamespace()
+    def load(df: org.apache.spark.sql.DataFrame, table: String, ifExists: String,
+        partitionBy: Seq[String]): Long =
+      around(table, () => inner.load(df, table, ifExists, partitionBy))
+    def table(s: org.apache.spark.sql.SparkSession, name: String) = inner.table(s, name)
+    def runSqlScript(s: org.apache.spark.sql.SparkSession, path: String): Unit =
+      inner.runSqlScript(s, path)
+  }
+
+  /** Every file under a table, relative to it, with its length. */
+  private def listing(wh: String, table: String): Set[(String, Long)] = {
+    val root = java.nio.file.Paths.get(wh, "s", table)
+    if (!Files.exists(root)) Set.empty
+    else {
+      val st = Files.walk(root)
+      try st.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => (root.relativize(f).toString, Files.size(f))).toSet
+      finally st.close()
+    }
+  }
+
+  test("incrementalSync: each micro-batch's dedup state executes once") {
+    val (src, distinct, reissued) = reissuedDrops()
+    val wh = Files.createTempDirectory("graft_stream_once_wh").toString
+    val loader = new ParquetLoader(wh, "s")
+    loader.ensureNamespace()
+    val q = dedupedSync(src, loader,
+      Files.createTempDirectory("graft_stream_once_ckpt").toString)
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, q.exception.toString)
+    val progress = q.recentProgress
+    assert(progress.count(_.numInputRows > 0) == 3,
+      s"expected one batch per drop: ${progress.map(_.numInputRows).toSeq}")
+    val ops = progress.flatMap(_.stateOperators)
+    assert(ops.nonEmpty, "no state operator progress")
+    // a second action over an unpersisted batch re-runs the store: 2×
+    assert(ops.map(_.numRowsUpdated).sum == distinct)
+    assert(ops.map(o => Option(o.customMetrics.get("numDroppedDuplicateRows"))
+      .map(_.longValue).getOrElse(0L)).sum == reissued)
+    assert(loader.table(spark, "raw_cur").count() == distinct)
+    assert(loader.table(spark, "cur_normalized").count() == distinct)
+  }
+
+  test("incrementalSync: empty batches write nothing; a failing append fails the query after the other completes") {
+    val (src, distinct, _) = reissuedDrops()
+    val wh = Files.createTempDirectory("graft_stream_empty_wh").toString
+    val ckpt = Files.createTempDirectory("graft_stream_empty_ckpt").toString
+    val inner = new ParquetLoader(wh, "s")
+    inner.ensureNamespace()
+    // per empty load: the table's listing before and after the call
+    val emptyLoads = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Set[(String, Long)], Set[(String, Long)])]()
+    val recording = new Around(inner)((t, load) => {
+      val before = listing(wh, t)
+      val n = load()
+      if (n == 0) emptyLoads.add((t, before, listing(wh, t)))
+      n
+    })
+    val q = dedupedSync(src, recording, ckpt)
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, q.exception.toString)
+    // the drain ends on a no-data batch (the watermark evicts dedup state)
+    assert(q.recentProgress.last.numInputRows == 0,
+      s"expected a trailing no-data batch: ${q.recentProgress.map(_.numInputRows).toSeq}")
+    val empties = emptyLoads.asScala.toSeq
+    assert(empties.map(_._1).toSet == Set("raw_cur", "cur_normalized"),
+      s"the no-data batch should reach both loads: ${empties.map(_._1)}")
+    empties.foreach { case (t, before, after) =>
+      assert(before == after, s"an empty batch changed $t: ${after -- before}") }
+    val drained = Seq("raw_cur", "cur_normalized").map(t => t -> listing(wh, t)).toMap
+    // restart on the same checkpoint with nothing new: no file changes
+    val q2 = dedupedSync(src, recording, ckpt)
+    q2.awaitTermination(120000)
+    assert(q2.exception.isEmpty, q2.exception.toString)
+    drained.foreach { case (t, files) => assert(listing(wh, t) == files, t) }
+    assert(inner.table(spark, "raw_cur").count() == distinct)
+
+    // a normalized append that throws: the query terminates with that
+    // exception, and the raw append of the same batch still completed
+    val wh2 = Files.createTempDirectory("graft_stream_fail_wh").toString
+    val inner2 = new ParquetLoader(wh2, "s")
+    inner2.ensureNamespace()
+    val boom = new IllegalStateException("normalized append failed")
+    val failing = new Around(inner2)((t, load) =>
+      if (t == "cur_normalized") throw boom else load())
+    val q3 = dedupedSync(src, failing,
+      Files.createTempDirectory("graft_stream_fail_ckpt").toString)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q3.awaitTermination(120000))
+    val causes = Iterator.iterate[Throwable](q3.exception.get)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.contains(boom), s"query failed with another error: ${causes.head}")
+    assert(q3.recentProgress.isEmpty, "the first batch should fail")
+    assert(inner2.table(spark, "raw_cur").count() == 40, "raw append of the failed batch")
   }
 
   test("exactly-once sink: replayed micro-batch cannot double-write") {
