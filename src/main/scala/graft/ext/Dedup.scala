@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
   * Scale design (100 TB posture):
   *  - exact dedup is a hash shuffle on the dedup key — Spark's
   *    `dropDuplicates`, no driver state;
-  *  - near-dup goes shingle → MinHash signature (narrow, per-row) →
-  *    LSH banding (explode k/r rows per doc) → bucket self-join. Only
+  *  - near-dup goes shingle → MinHash signature (one per-doc min) →
+  *    LSH banding (explode k/r rows per doc) → bucket grouping. Only
   *    docs sharing a band bucket are ever paired, so the quadratic
   *    explosion of naive all-pairs never materializes; skewed buckets
   *    (boilerplate shingles) are bounded by `maxBucket`;
@@ -53,57 +53,6 @@ object Dedup {
   def shingleHashes(text: Column, n: Int = 3): Column =
     call_function("graft_shingle_hashes", text, lit(n))
 
-  /** Per-doc MinHash signature (k hashes) from shingles.
-    *
-    * Cost shape: one codegen'd pass tokenizes and hashes every shingle
-    * byte range ([[shingleHashes]]); the codegen'd
-    * [[graft.functions.MinHashSignature]] expression then computes all k
-    * family minima in ONE fused pass over the long array
-    * (splitmix64-mixed per family index). Duplicate shingles don't
-    * perturb minima, so no distinct pass is needed. */
-  def withMinhashSignature(df: DataFrame, text: Column, k: Int = 32,
-      shingleWidth: Int = 3): DataFrame = {
-    df.withColumn("mh_sig",
-      call_function("graft_minhash", shingleHashes(text, shingleWidth), lit(k)))
-  }
-
-  /** E2: MinHash-LSH candidate pairs with estimated Jaccard.
-    *
-    * @param maxBucket skew guard: buckets larger than this (shared
-    *                  boilerplate) are dropped rather than joined —
-    *                  at scale this bounds the worst-case pair count.
-    */
-  def minhashCandidates(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 32, bands: Int = 8, shingleWidth: Int = 3,
-      minEstSim: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val r = k / bands
-    val sig = withMinhashSignature(
-        df.select(col(idCol).as("doc"), col(textCol)), col(textCol), k, shingleWidth)
-      .select(col("doc"), col("mh_sig"))
-    val bandHashes = (0 until bands).map(b => xxhash64(slice(col("mh_sig"), b * r + 1, r)))
-    val banded = sig
-      .select(col("doc"), col("mh_sig"), posexplode(array(bandHashes: _*)).as(Seq("band", "bh")))
-    // bucket-grouped pair expansion — same shape as
-    // [[minhashCandidatesPortable]] (r22): one front computation, the
-    // bucket size for free, est_sim thresholded before the distinct
-    val buckets = banded
-      .groupBy(col("band"), col("bh"))
-      .agg(collect_list(struct(col("doc"), col("mh_sig"))).as("members"))
-      .filter(size(col("members")) <= maxBucket)
-    buckets
-      .select(explode(col("members")).as("x"), col("members"))
-      .select(col("x"), explode(filter(col("members"),
-        m => m.getField("doc") > col("x").getField("doc"))).as("y"))
-      .select(col("x").getField("doc").as("doc1"),
-        col("y").getField("doc").as("doc2"),
-        (size(filter(zip_with(col("x").getField("mh_sig"), col("y").getField("mh_sig"),
-          (a, b) => a === b), z => z)).cast(DoubleType) / k).as("est_sim"))
-      .filter(col("est_sim") >= minEstSim)
-      .dropDuplicates("doc1", "doc2")
-  }
-
   /** Engine-neutral 60-bit hash: int64 of the first 15 hex chars of
     * md5(input) — stateable identically in Spark and DuckDB
     * (`CAST(('0x'||substr(md5(x),1,15)) AS BIGINT)`), positive, so
@@ -142,21 +91,22 @@ object Dedup {
       graft.functions.PortableValueHash24(
         org.apache.spark.sql.GraftColumns.expression(c)))
 
-  /** E2 (MinHash-LSH, oracle-bridged flavor): the same shingle → k-min
-    * signature → banded bucket-grouping pipeline as [[minhashCandidates]],
-    * with the engine-neutral [[portableFamily]] — ONE md5 per shingle,
-    * k exact affine mixes — so DuckDB can restate the whole pipeline and
-    * the driver hash-checks the candidate set.
+  /** E2: MinHash-LSH candidate pairs with estimated Jaccard — shingle →
+    * k-min signature → banded bucket grouping, with the engine-neutral
+    * [[portableFamily]] (ONE md5 per shingle, k exact affine mixes) so
+    * DuckDB can restate the whole pipeline and the candidate set is
+    * hash-checked against it.
+    *
+    * @param maxBucket skew guard: buckets larger than this (shared
+    *                  boilerplate) are dropped rather than paired — at
+    *                  scale this bounds the worst-case pair count.
     *
     * Plan shape is also the scale shape: shingles explode once, the k
     * family hashes are k plain codegen'd columns (no HOF), signatures are
     * k map-side `min` partial aggregates (one shuffle on doc), band keys
     * are signature slices, each (band, key) bucket is grouped once (one
     * shuffle on the key, no join) and its strictly-ordered pairs are
-    * expanded in-row, and oversized buckets are dropped by `maxBucket`
-    * exactly as in the throughput flavor.
-    * [[minhashCandidates]] (xxhash64+splitmix, fused native expression)
-    * remains the 100 TB throughput path. */
+    * expanded in-row, and oversized buckets are dropped by `maxBucket`. */
   def minhashCandidatesPortable(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 32, bands: Int = 8, shingleWidth: Int = 3,
@@ -287,25 +237,26 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** The ledger anchor for committed index appends: generation dirs
+  /** The generation ledger of committed index appends: generation dirs
     * `appends__b<id>` + one-object ledger `appends__stream_commits`
-    * under the index dir — the [[graft.streaming.ExactlyOnce]] commit
-    * idiom (single atomic PUT on a real object store) applied to the
-    * three-table append, so a crash mid-append can never publish a
-    * partial generation (ADVICE r10: the in-place three-table append
-    * had no commit point). */
-  private def appendsAnchor(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/appends")
+    * under the index dir, driven by [[graft.streaming.Generations]]
+    * (single atomic PUT on a real object store), so a crash mid-append
+    * can never publish a partial three-table generation. */
+  private def appends(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    graft.streaming.Generations(spark, new org.apache.hadoop.fs.Path(s"$dir/appends"))
+
+  /** The build's base tables: what a compaction folds and vacuum
+    * reclaims (`meta` stays — the dir remains self-describing). */
+  private def baseTables(dir: String) =
+    Seq("signatures", "bands", "fingerprints").map(t => new org.apache.hadoop.fs.Path(s"$dir/$t"))
 
   /** Committed append history of a persisted dedup index — (generation
     * id, is-compaction, stream watermarks) in id order; the snapshot
-    * catalog for [[loadDedupIndex]]'s `asOfGen` time travel. */
+    * catalog for [[loadDedupIndex]]'s `asOfGen` time travel
+    * ([[graft.streaming.Generations.history]]). */
   def indexHistory(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(Long, Boolean, Map[String, Long])] = {
-    val anchor = appendsAnchor(dir)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.ExactlyOnce.generationHistory(fs, anchor)
-  }
+      dir: String): Seq[(Long, Boolean, Map[String, Long])] =
+    appends(spark, dir).history
 
   /** Write the folded tables of `idx` to `outDir` — signatures are the
     * source of truth, band keys re-derive under the GLOBAL `maxBucket`
@@ -347,71 +298,31 @@ object Dedup {
     * deterministic).
     *
     * IN-PLACE and crash-safe: fold the base tables and every
-    * committed append generation into ONE new generation under the same
-    * index dir, marked as a COMPACTION
-    * ([[graft.streaming.ExactlyOnce.markCompaction]]), and promote it
-    * with the same single atomic ledger PUT an append uses. Readers
-    * ([[loadDedupIndex]]) resolve the newest committed compaction as
-    * the new base and ignore everything before it, so:
-    *  - a crash ANYWHERE before the PUT leaves the staged fold
-    *    invisible — the old index keeps serving, byte-for-byte;
-    *  - re-entry simply re-stages (the stage dir is cleared first) and
-    *    commits — no repair step, no half-promoted state;
-    *  - a torn PUT resolves read-side to the intact staged fold and is
-    *    repaired durably by the next writer (the
-    *    [[graft.streaming.ExactlyOnce.nextAppendId]] discipline).
-    * The subsumed base tables and generations stay on disk — readers
-    * holding a pre-compaction snapshot keep serving — until
-    * [[vacuumDedupIndex]] reclaims them. Single-maintainer contract as
-    * the append side: one compactor/appender per index at a time. */
+    * committed append generation into ONE new COMPACTION generation
+    * under the same index dir, promoted by the single atomic ledger PUT
+    * an append uses and carrying the folded stream watermarks forward
+    * ([[graft.streaming.Generations.compact]], which states the crash
+    * windows). Readers ([[loadDedupIndex]]) resolve the newest committed
+    * compaction as the new base; the subsumed base tables and
+    * generations stay on disk — readers holding a pre-compaction
+    * snapshot keep serving — until [[vacuumDedupIndex]] reclaims them.
+    * Single-maintainer contract as the append side. */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    import graft.streaming.ExactlyOnce
     val idx = loadDedupIndex(spark, dir)
-    val anchor = appendsAnchor(dir)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // carry the folded stream watermarks forward (max per lineage), so
-    // replay detection survives the fold — a compaction between stream
-    // runs must not let the next run's replay check forget what the
-    // folded generations had already admitted
-    val (cbase0, tail0) = ExactlyOnce.resolveGenerations(fs, anchor)
-    val watermarks = (cbase0.toSeq ++ tail0)
-      .flatMap(d => ExactlyOnce.readStreamTags(fs, d).toSeq)
-      .groupMapReduce(_._1)(_._2)(_ max _)
-    val id = ExactlyOnce.nextAppendId(fs, anchor)
-    val gen = ExactlyOnce.clearStage(fs, anchor, id)
-    writeCompacted(spark, idx, gen.toString)
-    if (watermarks.nonEmpty) ExactlyOnce.writeStreamTags(fs, gen, watermarks)
-    ExactlyOnce.markCompaction(fs, gen)
-    ExactlyOnce.commitLedger(fs, anchor, id)
+    appends(spark, dir).compact()(gen => writeCompacted(spark, idx, gen.toString))
   }
 
   /** Reclaim structures subsumed by the newest committed compaction:
     * the base tables (signatures/bands/fingerprints — `meta` stays, the
     * index dir remains self-describing and meta is immutable) and every
-    * earlier generation dir. Garbage-only by construction — readers
-    * resolve through the ledger to the compaction generation, so losing
-    * this cleanup to a crash leaves garbage, never wrong results (the
-    * [[graft.etl.ManifestCommit]] retired-generation rule). Do NOT run
-    * while a reader still holds a PRE-compaction snapshot: its lazy
-    * scans pin the old dirs. No-op when no compaction has committed. */
+    * earlier generation dir ([[graft.streaming.Generations.vacuum]]).
+    * Do NOT run while a reader still holds a PRE-compaction snapshot:
+    * its lazy scans pin the old dirs. No-op when no compaction has
+    * committed. */
   def vacuumDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    import graft.streaming.ExactlyOnce
-    val anchor = appendsAnchor(dir)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (cbase, _) = ExactlyOnce.resolveGenerations(fs, anchor)
-    cbase match {
-      case None => 0
-      case Some(cgen) =>
-        val dead = ExactlyOnce.committedDirs(fs, anchor).takeWhile(_ != cgen) ++
-          Seq("signatures", "bands", "fingerprints")
-            .map(t => new org.apache.hadoop.fs.Path(s"$dir/$t"))
-            .filter(fs.exists(_))
-        dead.foreach(fs.delete(_, true))
-        dead.size
-    }
-  }
+      dir: String): Int =
+    appends(spark, dir).vacuum(baseTables(dir))
 
   /** Load a [[buildDedupIndex]] directory: one driver row for the meta,
     * lazy scans for everything else. Each table is the base plus every
@@ -448,36 +359,14 @@ object Dedup {
       lineage: String = "default",
       asOfGen: Option[Long] = None,
       knownMeta: Option[DedupIndexMeta] = None): DedupIndex = {
-    import graft.streaming.ExactlyOnce
     // `knownMeta` skips the per-load meta-table read (one driver job):
     // meta is immutable for an index dir (build-time geometry; appends/
     // compactions never change it), so a caller that loads the same
     // index repeatedly — the per-micro-batch ingest loop — can pin it
     // once (r21; measured as one ~0.1-0.2 s job+gap per batch)
     lazy val m = spark.read.parquet(s"$dir/meta").head()
-    val anchor = appendsAnchor(dir)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (cbase, tail0) = ExactlyOnce.resolveGenerations(fs, anchor, asOfGen)
-    if (cbase.isEmpty && asOfGen.isDefined &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/signatures")))
-      sys.error(s"dedup index at $dir has no readable snapshot at " +
-        s"generation ${asOfGen.get}: the pre-compaction base was vacuumed " +
-        "— the earliest readable snapshot is the oldest retained " +
-        "compaction generation")
-    val tail = beforeBatch match {
-      case Some(b) =>
-        for (c <- cbase; w <- ExactlyOnce.readStreamTags(fs, c).get(lineage))
-          if (w >= b) sys.error(
-            s"dedup index at $dir was compacted past stream batch $b of " +
-              s"lineage '$lineage' (folded watermark $w) — the stream's " +
-              "checkpoint predates the fold, so the pre-batch index state " +
-              "cannot be reconstructed; restart the stream on a fresh " +
-              "checkpoint + sink, or compact only after the stream's last " +
-              "batch is checkpoint-committed")
-        tail0.filter(d =>
-          ExactlyOnce.readStreamTags(fs, d).get(lineage).forall(_ < b))
-      case None => tail0
-    }
+    val (cbase, tail) = appends(spark, dir).snapshot(s"dedup index at $dir",
+      baseTables(dir), asOfGen, beforeBatch, lineage)
     val baseDir = cbase.map(_.toString).getOrElse(dir)
     val gens = tail.map(_.toString)
     def table(name: String): DataFrame =
@@ -594,7 +483,7 @@ object Dedup {
     * verdicts of a just-deduped batch), ATOMICALLY: the three tables'
     * increments are staged in full into one generation dir
     * (`appends__b<id>/{signatures,bands,fingerprints}`), then published
-    * by a single ledger PUT ([[appendsAnchor]]) — readers see all three
+    * by a single ledger PUT ([[appends]]) — readers see all three
     * or none, so a crash mid-append can never publish fingerprints
     * without their band keys (the window the old in-place three-table
     * append had). A crash before the PUT leaves an invisible partial
@@ -612,14 +501,13 @@ object Dedup {
     *
     * `asStreamBatch` marks the append as stream micro-batch `g` of
     * `lineage` (the caller's sink path, typically) and makes it
-    * IDEMPOTENT: the batch id is written as a per-generation TAG
-    * ([[graft.streaming.ExactlyOnce.readStreamTags]]) during the stage,
-    * and an append whose lineage already carries a watermark ≥ g is a
-    * replay and returns without writing. Generation ids stay internal
-    * ([[graft.streaming.ExactlyOnce.nextAppendId]]), so stream batches
-    * COMPOSE with manual appends and in-place compaction — no id
-    * collisions, and a compaction carries the folded watermarks
-    * forward. An admitted-nothing batch writes nothing (its replay
+    * IDEMPOTENT: the batch id is written as a per-generation TAG during
+    * the stage, and an append whose lineage already carries a watermark
+    * ≥ g is a replay and returns without writing
+    * ([[graft.streaming.Generations.admitted]]). Generation ids stay
+    * internal, so stream batches COMPOSE with manual appends and
+    * in-place compaction — no id collisions, and a compaction carries
+    * the folded watermarks forward. An admitted-nothing batch writes nothing (its replay
     * re-derives the same nothing). One lineage per sink-dir contract
     * as [[graft.streaming.ExactlyOnce]]: a fresh checkpoint means a
     * fresh sink means a fresh lineage key. */
@@ -628,22 +516,14 @@ object Dedup {
       lineage: String = "default",
       knownMeta: Option[DedupIndexMeta] = None,
       knownNonEmpty: Boolean = false): Unit = {
-    import graft.streaming.ExactlyOnce
     val spark = docs.sparkSession
-    val anchor = appendsAnchor(dir)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (g <- asStreamBatch) {
-      val (cbase, tail) = ExactlyOnce.resolveGenerations(fs, anchor)
-      val seen = (cbase.toSeq ++ tail)
-        .flatMap(d => ExactlyOnce.readStreamTags(fs, d).get(lineage))
-      if (seen.exists(_ >= g)) return // replay of an admitted batch
-    }
+    val gens = appends(spark, dir)
+    if (asStreamBatch.exists(gens.admitted(lineage, _))) return // replay
     // `knownNonEmpty` skips the emptiness probe — its own Spark action —
     // for callers that already counted the admitted set (the per-batch
     // ingest loop, r22); an admitted-nothing batch writes nothing either
     // way (its replay re-derives the same nothing)
     if (!knownNonEmpty && docs.isEmpty) return
-    val id = ExactlyOnce.nextAppendId(fs, anchor)
     // meta is immutable per index dir — a caller holding a loaded index
     // pins it instead of paying one meta-read job per append (r21)
     val meta = knownMeta.getOrElse {
@@ -652,10 +532,9 @@ object Dedup {
         m.getAs[Int]("shingle_width"), m.getAs[Int]("max_bucket"))
     }
     val k = meta.k
-    val gen = ExactlyOnce.clearStage(fs, anchor, id)
     val sig = portableSignatures(docs, idCol, textCol, k, meta.shingleWidth)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    try gens.append(asStreamBatch.map(lineage -> _).toMap) { gen =>
       // §2.6 overlap; both sig consumers race to materialize the persist
       // first, which is safe (block-level getOrCompute locking computes
       // each partition once)
@@ -666,27 +545,15 @@ object Dedup {
           .write.mode("overwrite").parquet(s"$gen/bands"),
         () => docs.select(col(idCol).as("doc"), md5(lower(col(textCol))).as("fp"))
           .write.mode("overwrite").parquet(s"$gen/fingerprints"))
-      // the stream tag is part of the stage: complete before the PUT
-      asStreamBatch.foreach(g =>
-        ExactlyOnce.writeStreamTags(fs, gen, Map(lineage -> g)))
-      ExactlyOnce.commitLedger(fs, anchor, id)
     } finally { sig.unpersist(blocking = false); () }
   }
 
   /** 64-bit SimHash of the word multiset: per bit, vote +1/-1 by each
-    * token's xxhash64 bit, take the sign. Tokenize+hash and the 64-bit
-    * vote/sign loop are both native codegen'd expressions
-    * ([[graft.functions.TokenHashes]] → [[graft.functions.SimHash64]]);
-    * the HOF formulation (`transform(split(text," "), xxhash64)`)
-    * would force the whole stage to interpreted eval. */
-  def simhash64(text: Column): Column =
-    call_function("graft_simhash64", call_function("graft_token_hashes", text))
-
-  /** Oracle-bridged SimHash: word hashes from the [[portableHash64]]
-    * family (60-bit, DuckDB-stateable) voted through the same native
-    * [[graft.functions.SimHash64]] sign loop. Bits 60–63 of every word
-    * hash are zero, so those simhash bits vote all-negative and are 0 on
-    * both engines. The word hashing is the native
+    * word hash's bit, take the sign. Word hashes come from the
+    * [[portableHash64]] family (60-bit, DuckDB-stateable), voted through
+    * the native [[graft.functions.SimHash64]] sign loop. Bits 60–63 of
+    * every word hash are zero, so those simhash bits vote all-negative
+    * and are 0 on both engines. The word hashing is the native
     * [[graft.functions.PortableWordHashes]] expression — bit-identical
     * to `transform(split(text," "), portableHash64)` (property-tested)
     * but codegen'd: no HOF, no per-word string allocation. */
@@ -696,17 +563,13 @@ object Dedup {
   /** E2 (SimHash flavor): near-dup pairs by banding the 64-bit simhash
     * into `chunks` pieces — hamming distance ≤ chunks-1 guarantees at
     * least one equal chunk (pigeonhole), which seeds the candidate join;
-    * exact hamming is then computed on the candidates only.
-    *
-    * `simhashCol` picks the fingerprint flavor: the default
-    * [[simhash64]] (native xxhash64 tokenizer) is the throughput path;
-    * pass [[simhashPortable]] for the oracle-bridged hash family. */
+    * exact hamming is then computed on the candidates only. The
+    * fingerprint is [[simhashPortable]], so the oracle can restate it. */
   def simhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
-      chunks: Int = 4, maxHamming: Int = 3,
-      simhashCol: Column => Column = simhash64): DataFrame = {
+      chunks: Int = 4, maxHamming: Int = 3): DataFrame = {
     val width = 64 / chunks
-    val sh = df.select(col(idCol).as("doc"), simhashCol(col(textCol)).as("sh"))
+    val sh = df.select(col(idCol).as("doc"), simhashPortable(col(textCol)).as("sh"))
     val chunkCols = (0 until chunks).map { c =>
       shiftright(col("sh"), c * width)
         .bitwiseAND((1L << width) - 1).as(s"chunk_$c")
@@ -1216,7 +1079,7 @@ object Dedup {
     *
     * Granularity ladder this completes: whole-doc ([[exactGroups]]) →
     * paragraph ([[paragraphDedup]]) → k-token window (here) →
-    * set-similarity ([[minhashCandidates]]).
+    * set-similarity ([[minhashCandidatesPortable]]).
     *
     * Differs from [[contaminationOverlap]] (membership against a FIXED
     * benchmark set) and from TextOps.repetitionScore (WITHIN-doc

@@ -107,8 +107,7 @@ object ExtQueries {
   // the oracle-bridged hash family (md5-salted 60-bit hashes both engines
   // can state) — the full sketch pipeline (shingle → k-min signature →
   // band slice → bucket join → est_sim filter) is hash-checked by DuckDB,
-  // not declared rows-only. The xxhash64+splitmix throughput flavor
-  // (Dedup.minhashCandidates) is recall-tested in the suite.
+  // not declared rows-only.
   /** Temp dirs for declared queries' persisted artifacts (indexes,
     * staging, stream sinks/checkpoints): same per-invocation semantics
     * as `createTempDirectory`, plus ONE JVM shutdown hook that
@@ -272,7 +271,7 @@ object ExtQueries {
   val e06 = Q(
     "e06_simhash_candidates",
     (s, d) => Dedup.simhashCandidates(T.documents(s, d), "doc_id", "text",
-      chunks = 4, maxHamming = 3, simhashCol = Dedup.simhashPortable)
+      chunks = 4, maxHamming = 3)
       .orderBy(col("doc1"), col("doc2")),
     Some("""WITH wh AS (SELECT doc_id AS doc, list_transform(string_split(text,' '),
           w -> CAST(('0x'||substr(md5(w),1,15)) AS BIGINT)) hs FROM documents),

@@ -883,22 +883,23 @@ object Similarity {
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"))
   }
 
-  /** Ledger anchor for committed code appends (generation dirs
-    * `codes_appends__b<id>` + one-object ledger, the
-    * [[graft.streaming.ExactlyOnce]] append idiom shared with the
-    * dedup index). */
-  private def codesAnchor(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/codes_appends")
+  /** Generation ledger of committed code appends (generation dirs
+    * `codes_appends__b<id>` + one-object ledger), driven by
+    * [[graft.streaming.Generations]] like the dedup index's appends. */
+  private def codesAppends(spark: org.apache.spark.sql.SparkSession, path: String) =
+    graft.streaming.Generations(spark, new org.apache.hadoop.fs.Path(s"$path/codes_appends"))
+
+  /** The build's codes table: the base a compaction folds and vacuum
+    * reclaims (the model tables are never touched). */
+  private def codesBase(path: String) = new org.apache.hadoop.fs.Path(s"$path/codes")
 
   /** Committed append history of a persisted ANN index — (generation
     * id, is-compaction, stream watermarks) in id order; the snapshot
-    * catalog for [[loadIndex]]'s `asOfGen` time travel. */
+    * catalog for [[loadIndex]]'s `asOfGen` time travel
+    * ([[graft.streaming.Generations.history]]). */
   def indexHistory(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Boolean, Map[String, Long])] = {
-    val anchor = codesAnchor(path)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.ExactlyOnce.generationHistory(fs, anchor)
-  }
+      path: String): Seq[(Long, Boolean, Map[String, Long])] =
+    codesAppends(spark, path).history
 
   /** Load a persisted index for serving. Driver state is the SMALL side
     * only (nlist centroids + m·ksub codebook rows); the codes table
@@ -906,8 +907,8 @@ object Similarity {
     * LEDGER-COMMITTED append generation (crash-partial appends are
     * invisible).
     *
-    * `asOfGen` (inclusive) is generation time travel, the
-    * [[graft.ext.Dedup.loadDedupIndex]] contract: codes as of append
+    * `asOfGen` (inclusive) is generation time travel
+    * ([[graft.streaming.Generations.snapshot]]): codes as of append
     * generation g (`Some(-1)` = the as-built codes), compactions within
     * the horizon resolving as they did when they committed; a horizon
     * behind a vacuumed fold fails loudly. The model side (centroids,
@@ -915,8 +916,6 @@ object Similarity {
     * generation by construction. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       asOfGen: Option[Long] = None): IvfPqIndex = {
-    val anchor = codesAnchor(path)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // §2.6 overlap: the model side is three ONE-FILE parquet tables —
     // serially each read pays a full driver job latency (plan + listing
     // + one-task collect + gap) — and the two ledger listings are FS
@@ -930,8 +929,9 @@ object Similarity {
       // a committed COMPACTION generation (in-place compactIndex) is the
       // new codes base: the original codes dir and earlier generations
       // are ignored (and may already be vacuumed away)
-      () => graft.streaming.ExactlyOnce.resolveGenerations(fs, anchor, asOfGen),
-      () => graft.streaming.ExactlyOnce.committedDirs(fs, tombstonesAnchor(path)))
+      () => codesAppends(spark, path).snapshot(s"ANN index at $path",
+        Seq(codesBase(path)), asOfGen),
+      () => tombstones(spark, path).committed.map(_._2))
     val meta = parts(0).asInstanceOf[org.apache.spark.sql.Row]
     val (nlist, m, ksub, dsub, dim) = (meta.getInt(0), meta.getInt(1),
       meta.getInt(2), meta.getInt(3), meta.getInt(4))
@@ -947,14 +947,7 @@ object Similarity {
       }
     val (cbase, tail) =
       parts(3).asInstanceOf[(Option[org.apache.hadoop.fs.Path], Seq[org.apache.hadoop.fs.Path])]
-    if (cbase.isEmpty && asOfGen.isDefined &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes")))
-      sys.error(s"ANN index at $path has no readable snapshot at " +
-        s"generation ${asOfGen.get}: the pre-compaction codes base was " +
-        "vacuumed — the earliest readable snapshot is the oldest " +
-        "retained compaction generation")
-    val roots = cbase.map(_.toString).getOrElse(s"$path/codes") +:
-      tail.map(_.toString)
+    val roots = (cbase.getOrElse(codesBase(path)) +: tail).map(_.toString)
     // each root reads (and partition-prunes) its own cid= layout; the
     // union stays a streamed scan — compact when the generation count
     // matters
@@ -979,11 +972,15 @@ object Similarity {
     IvfPqIndex(IvfPqModel(cents, books, dim, dsub, nlist, m, ksub), idCol, codes)
   }
 
-  /** Tombstone ledger anchor (generation dirs `tombstones__b<id>` +
-    * one-object ledger, the same [[graft.streaming.ExactlyOnce]] idiom
-    * as the codes appends). */
-  private def tombstonesAnchor(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/tombstones")
+  /** Tombstone ledger (generation dirs `tombstones__b<id>` + one-object
+    * ledger): the same [[graft.streaming.Generations]] protocol as the
+    * codes appends, on its own anchor. */
+  private def tombstones(spark: org.apache.spark.sql.SparkSession, path: String) =
+    graft.streaming.Generations(spark, new org.apache.hadoop.fs.Path(s"$path/tombstones"))
+
+  /** Reserved lineage under which a compaction records the tombstone
+    * high-water mark it folded — the mark [[vacuumIndex]] reclaims up to. */
+  private val TombstoneLineage = "__tombstones"
 
   /** RIGHT-TO-BE-FORGOTTEN for a persisted ANN index: commit `ids` as a
     * tombstone generation. Forgotten vectors disappear from every
@@ -1012,18 +1009,14 @@ object Similarity {
     * subtracts the re-appended row. */
   def forgetFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame): Unit = {
-    import graft.streaming.ExactlyOnce
     val idCol = spark.read.parquet(s"$path/meta").head().getString(5)
     require(ids.columns.contains(idCol),
       s"Similarity.forgetFromIndex: ids must carry the index id column '$idCol'")
     if (ids.isEmpty) return
-    val anchor = tombstonesAnchor(path)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val id = ExactlyOnce.nextAppendId(fs, anchor)
-    val gen = ExactlyOnce.clearStage(fs, anchor, id)
-    ids.select(col(idCol)).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(gen.toString)
-    ExactlyOnce.commitLedger(fs, anchor, id)
+    tombstones(spark, path).append() { gen =>
+      ids.select(col(idCol)).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(gen.toString)
+    }
   }
 
   /** Compact an appended index WITHOUT retraining: the model tables
@@ -1035,33 +1028,25 @@ object Similarity {
     * IN-PLACE and crash-safe: fold the codes base and every
     * committed generation into one new `cid=`-partitioned COMPACTION
     * generation under the same index dir, promoted by a single atomic
-    * ledger PUT (the [[graft.ext.Dedup.compactDedupIndex]]
-    * discipline — see there for the crash windows: pre-PUT crashes are
-    * invisible, re-entry re-stages, torn PUTs repair). Subsumed dirs
-    * remain for pre-compaction readers until [[vacuumIndex]].
+    * ledger PUT ([[graft.streaming.Generations.compact]] — see there
+    * for the crash windows: pre-PUT crashes are invisible, re-entry
+    * re-stages, torn PUTs repair). Subsumed dirs remain for
+    * pre-compaction readers until [[vacuumIndex]].
     * Single-maintainer contract. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    import graft.streaming.ExactlyOnce
     // tombstone high-water mark BEFORE the fold: loadIndex's codes are
     // already tombstone-filtered, so this fold physically purges every
     // tombstone committed up to here — record that in the compaction
     // generation (as a reserved-lineage tag) so vacuumIndex can reclaim
     // the folded tombstone generations without risking ones committed
     // mid-compaction
-    val anchor = codesAnchor(path)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombHwm = ExactlyOnce.committedBatches(fs, tombstonesAnchor(path))
-      .map(_._1).maxOption
+    val tombs = tombstones(spark, path).committed
+    val tombHwm = tombs.lastOption.map(_._1)
     val idx = loadIndex(spark, path)
-    // carry folded stream watermarks forward (max per lineage) — see
-    // Dedup.compactDedupIndex
-    val (cbase0, tail0) = ExactlyOnce.resolveGenerations(fs, anchor)
-    val watermarks = (cbase0.toSeq ++ tail0)
-      .flatMap(d => ExactlyOnce.readStreamTags(fs, d).toSeq)
-      .groupMapReduce(_._1)(_._2)(_ max _)
-    val id = ExactlyOnce.nextAppendId(fs, anchor)
-    val gen = ExactlyOnce.clearStage(fs, anchor, id)
+    val codes = codesAppends(spark, path)
+    val (cbase0, tail0) = codes.resolve()
+    val fs = codesBase(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // CELL-PRUNED fold (r22, guide §6/VERDICT r21 #6): only cells that
     // need new bytes are decoded, shuffled and rewritten —
     //  - cells holding a tombstoned row (the physical purge), and
@@ -1075,8 +1060,7 @@ object Similarity {
     // real corpus, so at 100 TB the fold cost drops from O(index) to
     // O(affected cells) + a raw byte copy; the detection pass reads only
     // the (id, cid) columns. Byte-identical serve results either way.
-    val roots = cbase0.map(_.toString).getOrElse(s"$path/codes") +:
-      tail0.map(_.toString)
+    val roots = (cbase0.getOrElse(codesBase(path)) +: tail0).map(_.toString)
     val rootDfs = roots.map(spark.read.parquet(_))
     // one column-pruned job: per cell, how many roots hold its rows and
     // which root is the single owner (bounded: ≤ nlist rows collected)
@@ -1089,7 +1073,7 @@ object Similarity {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
     // one column-pruned job: cells a committed tombstone actually hits
     // (skipped when there are no tombstones)
-    val tombDirs = ExactlyOnce.committedDirs(fs, tombstonesAnchor(path))
+    val tombDirs = tombs.map(_._2)
     val hitCids: Set[Int] =
       if (tombDirs.isEmpty) Set.empty
       else {
@@ -1107,72 +1091,49 @@ object Similarity {
     val copyCells = cellRoots
       .filter { case (c, nr, _) => nr == 1 && !hitCids.contains(c) }
       .map { case (c, _, r0) => (c, roots(r0)) }
-    // rewrite pass FIRST (the overwrite write truncates the staging
-    // dir), sized to the affected cell count so the write stays one
-    // task per cell without nlist-wide empty tasks
-    if (rewriteCids.nonEmpty)
-      clusterByCell(idx.codes
-        .filter(col("cid").isin(rewriteCids.toSeq: _*))
-        .select(col(idx.idCol), col("packed"), col("__rnorm").as("rnorm"), col("cid")),
-        rewriteCids.size)
-        .write.mode("overwrite").partitionBy("cid").parquet(gen.toString)
-    // then the byte copy of untouched cells (driver FS loop: bounded by
-    // nlist dirs; each cell comes from exactly ONE root, so no name
-    // collisions inside a target dir)
-    copyCells.foreach { case (c, root) =>
-      val src = new org.apache.hadoop.fs.Path(s"$root/cid=$c")
-      val dst = new org.apache.hadoop.fs.Path(s"$gen/cid=$c")
-      fs.mkdirs(dst)
-      fs.listStatus(src).iterator
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .foreach { st =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-            new org.apache.hadoop.fs.Path(dst, st.getPath.getName),
-            false, spark.sparkContext.hadoopConfiguration)
-        }
+    codes.compact(tombHwm.map(TombstoneLineage -> _).toMap) { gen =>
+      // rewrite pass FIRST (the overwrite write truncates the staging
+      // dir), sized to the affected cell count so the write stays one
+      // task per cell without nlist-wide empty tasks
+      if (rewriteCids.nonEmpty)
+        clusterByCell(idx.codes
+          .filter(col("cid").isin(rewriteCids.toSeq: _*))
+          .select(col(idx.idCol), col("packed"), col("__rnorm").as("rnorm"), col("cid")),
+          rewriteCids.size)
+          .write.mode("overwrite").partitionBy("cid").parquet(gen.toString)
+      // then the byte copy of untouched cells (a sequential FS loop,
+      // bounded by nlist dirs; each cell comes from exactly ONE root, so
+      // no name collisions inside a target dir)
+      copyCells.foreach { case (c, root) =>
+        val src = new org.apache.hadoop.fs.Path(s"$root/cid=$c")
+        val dst = new org.apache.hadoop.fs.Path(s"$gen/cid=$c")
+        fs.mkdirs(dst)
+        fs.listStatus(src).iterator
+          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+            !st.getPath.getName.startsWith("."))
+          .foreach { st =>
+            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+              new org.apache.hadoop.fs.Path(dst, st.getPath.getName),
+              false, spark.sparkContext.hadoopConfiguration)
+          }
+      }
     }
-    // the reserved __tombstones lineage records the folded forget
-    // high-water mark; the max-merge with carried watermarks is correct
-    // because ledger ids only grow
-    val tags = watermarks ++ tombHwm.map(h =>
-      "__tombstones" -> (h max watermarks.getOrElse("__tombstones", Long.MinValue)))
-    if (tags.nonEmpty) ExactlyOnce.writeStreamTags(fs, gen, tags)
-    ExactlyOnce.markCompaction(fs, gen)
-    ExactlyOnce.commitLedger(fs, anchor, id)
   }
 
   /** Reclaim codes structures subsumed by the newest committed
-    * compaction: the original `codes/` dir and every earlier generation.
-    * Garbage-only (readers resolve through the ledger); model tables are
-    * never touched. Do NOT run while a reader holds a pre-compaction
+    * compaction: the original `codes/` dir and every earlier generation
+    * ([[graft.streaming.Generations.vacuum]]), plus the tombstone
+    * generations the compaction physically folded (id ≤ its recorded
+    * [[TombstoneLineage]] mark): every retained codes snapshot already
+    * excludes those rows, so the anti-join side no longer needs them.
+    * Later tombstones stay until the next fold; model tables are never
+    * touched. Do NOT run while a reader holds a pre-compaction
     * snapshot — its lazy codes scan pins the old dirs. No-op when no
     * compaction has committed. */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import graft.streaming.ExactlyOnce
-    val anchor = codesAnchor(path)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (cbase, _) = ExactlyOnce.resolveGenerations(fs, anchor)
-    cbase match {
-      case None => 0
-      case Some(cgen) =>
-        val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
-        val dead = ExactlyOnce.committedDirs(fs, anchor).takeWhile(_ != cgen) ++
-          (if (fs.exists(codesDir)) Seq(codesDir) else Seq.empty)
-        // tombstone generations the compaction physically folded (id ≤
-        // its recorded high-water mark) are spent: every retained codes
-        // snapshot already excludes those rows, so the anti-join side
-        // no longer needs them. Later tombstones stay until the next
-        // fold.
-        val tombDead = ExactlyOnce.readStreamTags(fs, cgen).get("__tombstones")
-          .toSeq.flatMap(h =>
-            ExactlyOnce.committedBatches(fs, tombstonesAnchor(path))
-              .filter(_._1 <= h).map(_._2))
-        (dead ++ tombDead).foreach(fs.delete(_, true))
-        dead.size + tombDead.size
-    }
-  }
+      path: String): Int =
+    codesAppends(spark, path).vacuum(Seq(codesBase(path)),
+      folds = Seq(TombstoneLineage -> tombstones(spark, path)))
 
   /** Grow a persisted index with new vectors WITHOUT retraining: encode
     * with the index's frozen model (same centroid assignment, same
@@ -1181,45 +1142,34 @@ object Similarity {
     * only staleness-drifts if the vector DISTRIBUTION shifts, at which
     * point rebuild) and stage the codes as one ledger-committed
     * generation, `cid=`-partitioned like the base build. Atomicity and
-    * crash windows exactly as [[graft.ext.Dedup.appendToDedupIndex]]:
-    * a crash mid-stage is invisible, a torn ledger PUT re-commits.
+    * crash windows are [[graft.streaming.Generations.append]]'s: a crash
+    * mid-stage is invisible, a torn ledger PUT re-commits.
     * Single-appender contract. */
   def appendToIndex(vectors: DataFrame, path: String,
       vecCol: String = "embedding", asStreamBatch: Option[Long] = None,
       lineage: String = "default",
       knownIndex: Option[IvfPqIndex] = None): Unit = {
-    import graft.streaming.ExactlyOnce
     val spark = vectors.sparkSession
-    val anchor = codesAnchor(path)
-    val fs = anchor.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val codes = codesAppends(spark, path)
     // `asStreamBatch`: the batch-keyed idempotent flavor (streaming
     // vector ingest, e55) — the batch id lands as a per-generation TAG
     // scoped by `lineage`, same contract as Dedup.appendToDedupIndex's:
     // replays of an admitted batch are no-ops, generation ids stay
     // internal (manual appends and compactions compose), compaction
     // carries the watermarks forward
-    for (g <- asStreamBatch) {
-      val (cbase, tail) = ExactlyOnce.resolveGenerations(fs, anchor)
-      val seen = (cbase.toSeq ++ tail)
-        .flatMap(d => ExactlyOnce.readStreamTags(fs, d).get(lineage))
-      if (seen.exists(_ >= g)) return // replay of an admitted batch
-    }
+    if (asStreamBatch.exists(codes.admitted(lineage, _))) return // replay
     if (vectors.isEmpty) return // before the ledger probe: no wasted repair/IO
     // model only; the codes scan stays unused. The model is FROZEN at
     // build time (appends never retrain), so a caller appending in a
     // loop pins the loaded index instead of paying the three model-table
     // reads (meta head + centroids/codebooks collects) per append (r21)
     val idx = knownIndex.getOrElse(loadIndex(spark, path))
-    val id = ExactlyOnce.nextAppendId(fs, anchor)
-    val gen = ExactlyOnce.clearStage(fs, anchor, id)
-    clusterByCell(encodeWithModel(vectors, idx.model, idx.idCol, vecCol)
-      .withColumnRenamed("__rnorm", "rnorm"), idx.model.nlist)
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(gen.toString)
-    // the stream tag is part of the stage: complete before the PUT
-    asStreamBatch.foreach(g =>
-      ExactlyOnce.writeStreamTags(fs, gen, Map(lineage -> g)))
-    ExactlyOnce.commitLedger(fs, anchor, id)
+    codes.append(asStreamBatch.map(lineage -> _).toMap) { gen =>
+      clusterByCell(encodeWithModel(vectors, idx.model, idx.idCol, vecCol)
+        .withColumnRenamed("__rnorm", "rnorm"), idx.model.nlist)
+        .write.mode("overwrite").partitionBy("cid")
+        .parquet(gen.toString)
+    }
   }
 
   /** Serve a query batch against a persisted index: probe → LUT → ADC

@@ -29,28 +29,11 @@ object GraftFunctions {
         require(children.size == 2, "graft_dot_f32 takes exactly 2 arguments")
         DotProductF32(children.head, children(1))
       }),
-    (new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_minhash takes (array<long>, k)")
-        val k = children(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash k must be an integer literal, got $other")
-        }
-        MinHashSignature(children.head, k)
-      }),
     (new FunctionIdentifier("graft_simhash64"),
       new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
       (children: Seq[Expression]) => {
         require(children.size == 1, "graft_simhash64 takes exactly 1 argument")
         SimHash64(children.head)
-      }),
-    (new FunctionIdentifier("graft_token_hashes"),
-      new ExpressionInfo(classOf[TokenHashes].getName, "graft_token_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_token_hashes takes exactly 1 argument")
-        TokenHashes(children.head)
       }),
     (new FunctionIdentifier("graft_subword_classes"),
       new ExpressionInfo(classOf[SubwordClasses].getName, "graft_subword_classes"),

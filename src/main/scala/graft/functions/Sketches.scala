@@ -6,108 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Single-pass sketch expressions over pre-hashed token arrays.
+/** 64-bit SimHash from pre-hashed words: sign of per-bit ±1 votes.
   *
-  * Both take `array<long>` (each shingle/word already hashed once with
-  * `xxhash64`) and fuse what the higher-order-function formulations do
-  * in k (resp. 64) interpreted passes into one codegen'd loop:
-  *
-  *  - [[MinHashSignature]]: sig[i] = min over x of mix(x, i) — the k
-  *    hash-family members are splitmix64 finalizations of x ⊕ seedᵢ,
-  *    computed in the inner loop while x is hot.
-  *  - [[SimHash64]]: classic 64-bit sign-of-votes fingerprint.
-  *
-  * The mixers use the public splitmix64 constants; Java arithmetic
-  * wraps (no ANSI overflow — this is exactly why these are expressions,
-  * not column algebra).
+  * Takes `array<long>` (each word already hashed once, e.g. by
+  * `graft_portable_words`) and fuses what the higher-order-function
+  * formulation does in 64 interpreted passes into one codegen'd loop.
   */
-object Sketches {
-
-  /** splitmix64 finalizer — statistically strong 64→64 mixer. */
-  @inline final def mix64(v: Long): Long = {
-    var z = v
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  final val GOLDEN = 0x9E3779B97F4A7C15L
-
-  // Java source of the mixer, inlined into generated code.
-  private[functions] val mixJava: String =
-    """
-      |private long graft_mix64(long v) {
-      |  long z = v;
-      |  z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L;
-      |  z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL;
-      |  return z ^ (z >>> 31);
-      |}
-    """.stripMargin
-}
-
-/** MinHash signature: k minima of mixed hashes, one pass over the input. */
-case class MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  require(k > 0 && k <= 1024, s"minhash k out of range: $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<long>, got $t")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    val sig = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      val x = xs.getLong(j)
-      var i = 0
-      while (i < k) {
-        val h = Sketches.mix64(x ^ (Sketches.GOLDEN * (i + 1)))
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    ctx.addNewFunction("graft_mix64", Sketches.mixJava)
-    nullSafeCodeGen(ctx, ev, xs => {
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val x = ctx.freshName("x")
-      val h = ctx.freshName("h")
-      val n = ctx.freshName("n")
-      s"""
-         |// graft_minhash fused loop
-         |int $n = $xs.numElements();
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $j = 0; $j < $n; $j++) {
-         |  long $x = $xs.getLong($j);
-         |  for (int $i = 0; $i < $k; $i++) {
-         |    long $h = graft_mix64($x ^ (${Sketches.GOLDEN}L * ($i + 1)));
-         |    if ($h < $sig[$i]) $sig[$i] = $h;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash from pre-hashed words: sign of per-bit ±1 votes. */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

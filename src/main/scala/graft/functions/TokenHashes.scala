@@ -12,8 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * dedup/sketch pipeline.
   *
   * Why native: the column-algebra formulation
-  * (`transform(split(text,' '), w -> xxhash64(w))` /
-  * `transform(sequence(...), i -> concat_ws(' ', element_at...))`)
+  * (`transform(sequence(...), i -> concat_ws(' ', element_at...))`)
   * contains higher-order functions, and ANY HOF in a projection kicks
   * the whole stage out of whole-stage codegen — the sketch front then
   * interprets two lambdas per token and allocates every n-gram string.
@@ -68,20 +67,6 @@ object TokenHashes {
 
   private def xx(bytes: Array[Byte], start: Int, end: Int): Long =
     XXH64.hashUnsafeBytes(bytes, ByteArrayOffset + start, end - start, Seed)
-
-  /** xxhash64 of each whitespace token's bytes, in order (multiset —
-    * duplicates kept, matching `transform(split(t,' '), xxhash64)`). */
-  def tokens(t: UTF8String): GenericArrayData = {
-    val bytes = t.getBytes
-    val (starts, ends) = wordBounds(bytes)
-    val out = new Array[Long](starts.length)
-    var w = 0
-    while (w < starts.length) {
-      out(w) = xx(bytes, starts(w), ends(w))
-      w += 1
-    }
-    new GenericArrayData(out)
-  }
 
   /** xxhash64 of each n-word shingle's byte range; a text with fewer
     * than n words yields one hash of the whole text (the `shingles`
@@ -299,29 +284,6 @@ case class PortableShingleHashes(child: Expression, n: Int) extends UnaryExpress
       s"${ev.value} = graft.functions.PortableShingleHashes.compute($c, $n); // graft_portable_shingles")
 
   override protected def withNewChildInternal(newChild: Expression): PortableShingleHashes =
-    copy(child = newChild)
-}
-
-/** `graft_token_hashes(text)` → array<long>: xxhash64 per whitespace
-  * token, in token order. */
-case class TokenHashes(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got $t")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_token_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    TokenHashes.tokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenHashes.tokens($c); // graft_token_hashes")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenHashes =
     copy(child = newChild)
 }
 

@@ -53,10 +53,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object ExactlyOnce {
 
-  def ledgerPath(base: HPath): HPath =
+  private[graft] def ledgerPath(base: HPath): HPath =
     new HPath(base.getParent, s"${base.getName}__stream_commits")
 
-  def batchDir(base: HPath, id: Long): HPath =
+  private[graft] def batchDir(base: HPath, id: Long): HPath =
     new HPath(base.getParent, f"${base.getName}__b$id%09d")
 
   /** A ledger that exists but does not hold a complete `b<N>\n` record:
@@ -98,7 +98,7 @@ object ExactlyOnce {
     }
   }
 
-  def schemaPath(base: HPath): HPath =
+  private def schemaPath(base: HPath): HPath =
     new HPath(base.getParent, s"${base.getName}__schema.json")
 
   /** Persist the sink's schema once (first commit, empty or not), so
@@ -117,13 +117,13 @@ object ExactlyOnce {
   }
 
   /** Commit batch `id`: one ledger PUT — the atomic commit point. */
-  def commitLedger(fs: FileSystem, base: HPath, id: Long): Unit = {
+  private[graft] def commitLedger(fs: FileSystem, base: HPath, id: Long): Unit = {
     val out = fs.create(ledgerPath(base), true)
     try out.write(s"b$id\n".getBytes("UTF-8")) finally out.close()
   }
 
   /** All `table__b*` sibling dirs with their batch ids. */
-  def listBatchDirs(fs: FileSystem, base: HPath): Seq[(Long, HPath)] = {
+  private[graft] def listBatchDirs(fs: FileSystem, base: HPath): Seq[(Long, HPath)] = {
     val prefix = s"${base.getName}__b"
     if (!fs.exists(base.getParent)) Seq.empty
     else fs.listStatus(base.getParent).toSeq
@@ -141,11 +141,11 @@ object ExactlyOnce {
     * PUT begins, so a torn ledger implies its generation is intact —
     * without writing (the next append repairs it durably via
     * [[nextAppendId]]). */
-  def committedDirs(fs: FileSystem, anchor: HPath): Seq[HPath] =
+  private[graft] def committedDirs(fs: FileSystem, anchor: HPath): Seq[HPath] =
     committedBatches(fs, anchor).map(_._2)
 
   /** [[committedDirs]] with the batch ids attached. */
-  def committedBatches(fs: FileSystem, anchor: HPath): Seq[(Long, HPath)] = {
+  private[graft] def committedBatches(fs: FileSystem, anchor: HPath): Seq[(Long, HPath)] = {
     val lastOpt =
       try lastCommitted(fs, anchor)
       catch {
@@ -168,16 +168,16 @@ object ExactlyOnce {
     * can live inside a generation dir that is itself a parquet root.
     * Committed via the same single ledger PUT as a plain append — the
     * atomic promote the caller-owned directory swap never had. */
-  val CompactionMarkerName = "_COMPACTION"
+  private val CompactionMarkerName = "_COMPACTION"
 
-  def compactionMarker(gen: HPath): HPath = new HPath(gen, CompactionMarkerName)
+  private def compactionMarker(gen: HPath): HPath = new HPath(gen, CompactionMarkerName)
 
-  def markCompaction(fs: FileSystem, gen: HPath): Unit = {
+  private[graft] def markCompaction(fs: FileSystem, gen: HPath): Unit = {
     val out = fs.create(compactionMarker(gen), true)
     try out.write("compaction\n".getBytes("UTF-8")) finally out.close()
   }
 
-  def isCompaction(fs: FileSystem, gen: HPath): Boolean =
+  private[graft] def isCompaction(fs: FileSystem, gen: HPath): Boolean =
     fs.exists(compactionMarker(gen))
 
   /** The stage target for generation `id`, CLEARED of any crash-partial
@@ -187,7 +187,7 @@ object ExactlyOnce {
     * re-staging the same id with per-table overwrites would leave that
     * stray marker in place — publishing an ordinary append as a
     * base-subsuming compaction, which silently drops the real base. */
-  def clearStage(fs: FileSystem, anchor: HPath, id: Long): HPath = {
+  private[graft] def clearStage(fs: FileSystem, anchor: HPath, id: Long): HPath = {
     val gen = batchDir(anchor, id)
     fs.delete(gen, true)
     gen
@@ -198,40 +198,21 @@ object ExactlyOnce {
     * A compaction generation folds the base and everything before it
     * (single-appender contract: nothing commits between the fold's
     * snapshot and its PUT), so readers take it as the base and append
-    * only the tail. Stream-batch time travel (the replay contract) is
-    * layered on top by the index loaders via [[readStreamTags]], not
-    * here — generation ids are internal and carry no stream meaning. */
-  def resolveGenerations(fs: FileSystem,
-      anchor: HPath): (Option[HPath], Seq[HPath]) =
-    resolveGenerations(fs, anchor, None)
-
-  /** [[resolveGenerations]] restricted to generations with id ≤ `asOf`
-    * — the snapshot a reader saw at that point of the append history
-    * (time travel). `asOf = Some(-1)` is the pre-append state (base
-    * tables only). A compaction generation within the horizon still
-    * folds everything before it, exactly as it did when it committed;
-    * whether the ORIGINAL base behind an out-of-horizon compaction is
-    * still readable is the caller's check (vacuum may have reclaimed
-    * it — see the index loaders' retained-history errors). */
-  def resolveGenerations(fs: FileSystem, anchor: HPath,
-      asOf: Option[Long]): (Option[HPath], Seq[HPath]) = {
+    * only the tail. `asOf` restricts to generations with id ≤ `asOf` —
+    * the snapshot a reader saw at that point of the append history
+    * (time travel; `Some(-1)` is the base tables only). A compaction
+    * within the horizon still folds everything before it, exactly as it
+    * did when it committed. Stream-batch time travel and the
+    * vacuumed-horizon check are layered on top by
+    * [[Generations.snapshot]] — generation ids are internal and carry no
+    * stream meaning. */
+  private[graft] def resolveGenerations(fs: FileSystem, anchor: HPath,
+      asOf: Option[Long] = None): (Option[HPath], Seq[HPath]) = {
     val dirs = committedBatches(fs, anchor)
       .filter { case (id, _) => asOf.forall(id <= _) }.map(_._2)
     val iC = dirs.lastIndexWhere(isCompaction(fs, _))
     if (iC < 0) (None, dirs) else (Some(dirs(iC)), dirs.drop(iC + 1))
   }
-
-  /** Committed append history under `anchor`, in id order: per
-    * generation its id, whether it is a compaction fold, and its
-    * stream-batch watermarks (empty for manual appends). The
-    * introspection surface behind the CLI's `index-history` — answers
-    * "which snapshots can I time-travel to, and which stream batches
-    * does each carry" without loading any data. */
-  def generationHistory(fs: FileSystem,
-      anchor: HPath): Seq[(Long, Boolean, Map[String, Long])] =
-    committedBatches(fs, anchor).map { case (id, p) =>
-      (id, isCompaction(fs, p), readStreamTags(fs, p))
-    }
 
   /** Marker object inside a generation dir carrying STREAM-BATCH
     * watermarks: which micro-batch of which stream lineage this
@@ -249,11 +230,11 @@ object ExactlyOnce {
     * ledger PUT), so a committed generation's tag file is always
     * complete — a torn tag implies an uncommitted generation, which is
     * invisible anyway. */
-  val StreamTagName = "_STREAM_BATCH"
+  private val StreamTagName = "_STREAM_BATCH"
 
-  def streamTagPath(gen: HPath): HPath = new HPath(gen, StreamTagName)
+  private[graft] def streamTagPath(gen: HPath): HPath = new HPath(gen, StreamTagName)
 
-  def writeStreamTags(fs: FileSystem, gen: HPath,
+  private[graft] def writeStreamTags(fs: FileSystem, gen: HPath,
       tags: Map[String, Long]): Unit = {
     require(tags.keys.forall(l => l.nonEmpty && !l.contains('\n')),
       "stream lineage keys must be non-empty and newline-free")
@@ -268,7 +249,7 @@ object ExactlyOnce {
     * complete by construction (see [[StreamTagName]]); a malformed line
     * here means out-of-band interference and fails loudly rather than
     * silently re-admitting a replayed batch. */
-  def readStreamTags(fs: FileSystem, gen: HPath): Map[String, Long] = {
+  private[graft] def readStreamTags(fs: FileSystem, gen: HPath): Map[String, Long] = {
     val p = streamTagPath(gen)
     if (!fs.exists(p)) Map.empty
     else {
@@ -298,7 +279,7 @@ object ExactlyOnce {
     * repairing a torn ledger DURABLY first (re-commit the highest
     * staged generation, or discard an orphan torn ledger). Write-side
     * counterpart of [[committedDirs]]; single-appender contract. */
-  def nextAppendId(fs: FileSystem, anchor: HPath): Long = {
+  private[graft] def nextAppendId(fs: FileSystem, anchor: HPath): Long = {
     val last =
       try lastCommitted(fs, anchor)
       catch {

@@ -124,10 +124,10 @@ class DedupSimilaritySpec extends SparkSpec {
     val df = Seq((1L, "the quick brown fox jumps over the lazy dog"),
                  (2L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    val sigs = Dedup.withMinhashSignature(df, col("text"), k = 16)
-      .select("mh_sig").collect().map(_.getSeq[Long](0))
-    assert(sigs(0) == sigs(1))
-    val sh = df.select(Dedup.simhash64(col("text")).as("sh")).collect().map(_.getLong(0))
+    val sigs = Dedup.portableSignatures(df, "doc_id", "text", k = 16, shingleWidth = 3)
+      .select("sig").collect().map(_.getSeq[Long](0))
+    assert(sigs.length == 2 && sigs(0) == sigs(1))
+    val sh = df.select(Dedup.simhashPortable(col("text")).as("sh")).collect().map(_.getLong(0))
     assert(sh(0) == sh(1))
   }
 
@@ -140,8 +140,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .filter(col("nat") =!= col("hof")).count()
     assert(shMismatch == 0)
     val tokMismatch = docs.select(
-      call_function("graft_token_hashes", col("text")).as("nat"),
-      transform(split(col("text"), " "), w => xxhash64(w)).as("hof"))
+      call_function("graft_portable_words", col("text")).as("nat"),
+      transform(split(col("text"), " "), w => Dedup.portableHash64(w)).as("hof"))
       .filter(col("nat") =!= col("hof")).count()
     assert(tokMismatch == 0)
     // short-document rule: fewer than n words → one whole-text hash
@@ -192,7 +192,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("E2: MinHash-LSH recall vs exact Jaccard pairs (threshold 0.5)") {
     val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .select("doc1", "doc2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cand = Dedup.minhashCandidates(docs, "doc_id", "text", k = 32, bands = 8, minEstSim = 0.4)
+    val cand = Dedup.minhashCandidatesPortable(docs, "doc_id", "text", k = 32, bands = 8, minEstSim = 0.4)
       .select("doc1", "doc2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "fixture should contain near-dup docs")
     val recall = (exact intersect cand).size.toDouble / exact.size

@@ -21,6 +21,9 @@ class IndexLifecycleSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   // small corpus with enough words to shingle at width 3
   private def doc(i: Long, salt: String = ""): (Long, String) =
     (i, s"distinct corpus prose number $i about topic ${i * 7} $salt with " +
@@ -38,6 +41,44 @@ class IndexLifecycleSpec extends SparkSpec {
       (12L until 14L).map(doc(_, "appended-two")).toDF("doc_id", "text"),
       "doc_id", "text", dir)
     (dir, new HPath(s"$dir/appends"))
+  }
+
+  /** One persisted index as the crash-window tests drive it. Both
+    * indexes run on the same generation protocol
+    * ([[graft.streaming.Generations]]), so those tests walk each kind:
+    * `served` is the resolved rows (a sorted multiset, so a duplicate
+    * shows), `appendOne` grows them by one row,
+    * `stagePartial` leaves crash-partial table data in a stage dir. */
+  private case class Ix(kind: String, anchor: HPath, served: () => Seq[String],
+      compact: () => Unit, appendOne: () => Unit, stagePartial: HPath => Unit)
+
+  private def dedupIx(tag: String): Ix = {
+    import spark.implicits._
+    val (dir, anchor) = mkDedup(tag)
+    Ix("dedup", anchor, () => sortedRows(Dedup.loadDedupIndex(spark, dir).fingerprints),
+      () => Dedup.compactDedupIndex(spark, dir),
+      () => Dedup.appendToDedupIndex(
+        Seq(doc(20L, s"after-$tag")).toDF("doc_id", "text"), "doc_id", "text", dir),
+      staged => Seq((99L, "fp")).toDF("doc", "fp")
+        .write.mode("overwrite").parquet(s"$staged/fingerprints"))
+  }
+
+  private def annIx(tag: String): Ix = {
+    import spark.implicits._
+    val embs = graft.Tables.embeddings(spark, sf001)
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_ilc_ann_$tag").toString
+    Similarity.buildIndex(embs.filter(col("vec_id") < 400), dir,
+      nlist = 16, m = 8, ksub = 16, pqIters = 1)
+    Similarity.appendToIndex(
+      embs.filter(col("vec_id") >= 400 && col("vec_id") < 450), dir)
+    Similarity.appendToIndex(
+      embs.filter(col("vec_id") >= 450 && col("vec_id") < 480), dir)
+    Ix("ann", new HPath(s"$dir/codes_appends"),
+      () => sortedRows(Similarity.loadIndex(spark, dir).codes.select("vec_id")),
+      () => Similarity.compactIndex(spark, dir),
+      () => Similarity.appendToIndex(embs.filter(col("vec_id") === 480L), dir),
+      staged => Seq(99999L).toDF("vec_id")
+        .write.mode("overwrite").parquet(s"$staged/cid=0"))
   }
 
   test("in-place dedup compaction: crash before the PUT is invisible, re-entry completes") {
@@ -92,43 +133,41 @@ class IndexLifecycleSpec extends SparkSpec {
   }
 
   test("a stray compaction marker from an abandoned stage cannot poison a plain append") {
-    import spark.implicits._
-    val (dir, anchor) = mkDedup("stray")
-    val fs = fsOf(anchor)
-    // abandoned compaction stage at the next id: partial tables + the
-    // marker, no PUT (crash mid-compaction)
-    val staged = ExactlyOnce.batchDir(anchor, 2L)
-    Seq((99L, "fp")).toDF("doc", "fp")
-      .write.mode("overwrite").parquet(s"$staged/fingerprints")
-    ExactlyOnce.markCompaction(fs, staged)
-    // the next PLAIN append reuses id 2 — the stage must be cleared, or
-    // the append would publish as a base-subsuming compaction
-    Dedup.appendToDedupIndex(
-      Seq(doc(20L, "after-crash")).toDF("doc_id", "text"), "doc_id", "text", dir)
-    assert(!ExactlyOnce.isCompaction(fs, staged),
-      "clearStage must remove the abandoned marker")
-    val idx = Dedup.loadDedupIndex(spark, dir)
-    assert(idx.fingerprints.count() == 9,
-      "base + both appends + the new doc — nothing subsumed, nothing leaked")
+    for (ix <- Seq(dedupIx("stray"), annIx("stray"))) {
+      val fs = fsOf(ix.anchor)
+      val before = ix.served()
+      // abandoned compaction stage at the next id: partial tables + the
+      // marker, no PUT (crash mid-compaction)
+      val staged = ExactlyOnce.batchDir(ix.anchor, 2L)
+      ix.stagePartial(staged)
+      ExactlyOnce.markCompaction(fs, staged)
+      // the next PLAIN append reuses id 2 — the stage must be cleared, or
+      // the append would publish as a base-subsuming compaction
+      ix.appendOne()
+      assert(!ExactlyOnce.isCompaction(fs, staged),
+        s"${ix.kind}: clearStage must remove the abandoned marker")
+      val after = ix.served()
+      assert(after.diff(before).size == 1 && before.diff(after).isEmpty,
+        s"${ix.kind}: base + both appends + the new row — nothing subsumed, nothing leaked")
+    }
   }
 
   test("torn promote PUT: readers resolve to the intact fold; the next writer repairs") {
-    import spark.implicits._
-    val (dir, anchor) = mkDedup("torn")
-    val fs = fsOf(anchor)
-    Dedup.compactDedupIndex(spark, dir)
-    val folded = rows(Dedup.loadDedupIndex(spark, dir).fingerprints)
-    // tear the promote PUT: prefix of the record, no terminator
-    val out = fs.create(ExactlyOnce.ledgerPath(anchor), true)
-    try out.write("b2".getBytes("UTF-8")) finally out.close()
-    // read-side: single-appender contract means the stage completed
-    // before any PUT began, so the torn ledger resolves to the fold
-    assert(rows(Dedup.loadDedupIndex(spark, dir).fingerprints) == folded)
-    // write-side: the next append repairs the ledger durably, then lands
-    Dedup.appendToDedupIndex(
-      Seq(doc(30L, "post-torn")).toDF("doc_id", "text"), "doc_id", "text", dir)
-    assert(ExactlyOnce.lastCommitted(fs, anchor).contains(3L))
-    assert(Dedup.loadDedupIndex(spark, dir).fingerprints.count() == 9)
+    for (ix <- Seq(dedupIx("torn"), annIx("torn"))) {
+      val fs = fsOf(ix.anchor)
+      ix.compact()
+      val folded = ix.served()
+      // tear the promote PUT: prefix of the record, no terminator
+      val out = fs.create(ExactlyOnce.ledgerPath(ix.anchor), true)
+      try out.write("b2".getBytes("UTF-8")) finally out.close()
+      // read-side: single-appender contract means the stage completed
+      // before any PUT began, so the torn ledger resolves to the fold
+      assert(ix.served() == folded, ix.kind)
+      // write-side: the next append repairs the ledger durably, then lands
+      ix.appendOne()
+      assert(ExactlyOnce.lastCommitted(fs, ix.anchor).contains(3L), ix.kind)
+      assert(ix.served().size == folded.size + 1, ix.kind)
+    }
   }
 
   test("dedup vacuum reclaims subsumed dirs; serving unchanged; appends continue") {

@@ -46,20 +46,18 @@ class DotProductF32Spec extends SparkSpec {
       s"graft_dot_f32 fell back to interpreted eval:\n$dotCode")
 
     val docs = T.documents(spark, sf001)
-    val mhPlan = graft.ext.Dedup.withMinhashSignature(docs, col("text"), k = 16)
+    val mhPlan = docs.select(graft.ext.Dedup.shingleHashes(col("text"), 3).as("h"))
     val mhCode = org.apache.spark.sql.execution.debug.codegenString(
       mhPlan.queryExecution.executedPlan)
-    assert(mhCode.contains("graft_minhash fused loop"),
-      s"graft_minhash fell back to interpreted eval:\n$mhCode")
     assert(mhCode.contains("graft_shingle_hashes"),
       s"shingle tokenizer fell back to interpreted eval:\n$mhCode")
 
-    val shPlan = docs.select(graft.ext.Dedup.simhash64(col("text")).as("sh"))
+    val shPlan = docs.select(graft.ext.Dedup.simhashPortable(col("text")).as("sh"))
     val shCode = org.apache.spark.sql.execution.debug.codegenString(
       shPlan.queryExecution.executedPlan)
     assert(shCode.contains("graft_simhash64 fused loop"),
       s"graft_simhash64 fell back to interpreted eval:\n$shCode")
-    assert(shCode.contains("graft_token_hashes"),
+    assert(shCode.contains("graft_portable_words"),
       s"word tokenizer fell back to interpreted eval:\n$shCode")
   }
 
