@@ -115,33 +115,15 @@ trait Loader extends AutoCloseable {
     sqlText.split(";").map(_.trim).filter(_.nonEmpty).toSeq
 }
 
-object Loader {
-  /** Filesystem schemes whose `rename` is a non-atomic copy+delete —
-    * [[ParquetLoader.compact]] uses the manifest/pointer commit
-    * ([[ManifestCommit]]) on these instead of the two-rename swap. */
-  val copyRenameSchemes: Set[String] =
-    Set("s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "swift", "cosn")
-
-  /** The effective object-store scheme set: the built-ins plus any
-    * schemes named in the `graft.compact.objectStoreSchemes` session
-    * conf (comma-separated) — how a deployment flags a custom
-    * FileSystem whose rename is a copy+delete (and how the contract
-    * test drives the manifest path over `graftfs://`). */
-  def objectStoreSchemes(spark: SparkSession): Set[String] =
-    copyRenameSchemes ++ spark.conf.get("graft.compact.objectStoreSchemes", "")
-      .split(',').map(_.trim).filter(_.nonEmpty)
-}
-
 /** Parquet warehouse sink: `warehouseDir/schema/table/` per table. */
 final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
   private def dir(table: String) = s"$warehouseDir/$schema/$table"
 
-  /** The table's LIVE data directory: the base dir normally, or the
-    * committed generation when an object-store compaction has flipped a
-    * [[ManifestCommit]] manifest. Self-describing (driven by manifest
-    * presence, not scheme), so every read and write path below resolves
-    * identically; the cost on never-compacted tables is one existence
-    * probe. */
+  /** The table's LIVE data directory: the base dir until the first
+    * compaction, then the generation its [[ManifestCommit]] manifest
+    * names. Self-describing (driven by manifest presence, not scheme),
+    * so every read and write path below resolves identically; the cost
+    * on never-compacted tables is one existence probe. */
   private def dataDir(spark: SparkSession, table: String): String = {
     val base = new HPath(dir(table))
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
@@ -225,9 +207,9 @@ final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
     // object-store warehouse (s3a://) would silently return "no files"
     // from a local File listing and dynamic-overwrite a mixed layout —
     // the exact corruption this guard exists to prevent
-    // all writes land in the manifest-resolved generation: after an
-    // object-store compaction, appends must reach the directory readers
-    // resolve, not the retired base dir
+    // all writes land in the manifest-resolved generation: after a
+    // compaction, appends must reach the directory readers resolve, not
+    // the retired base dir
     val target = dataDir(df.sparkSession, table)
     val migrate = dynamic && {
       val p = new org.apache.hadoop.fs.Path(target)
@@ -418,107 +400,43 @@ final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
     * appends (foreachBatch writes one file set per micro-batch) and
     * fine-grained partitionBy fragment a table into files whose open/
     * footer cost dominates scans at 100 TB. One distributed pass:
-    * read → repartition to ceil(bytes/target) → write to a staging dir →
-    * two-rename directory swap (the table stays readable until the swap;
-    * a write-phase failure leaves the original untouched, and an
-    * interrupted swap is detected and repaired on the next compact —
-    * see the recovery block). Partitioned layouts keep their partition
-    * columns (re-clustered one file per value, the loader's write
-    * discipline) with directory names preserved verbatim.
+    * read → repartition to ceil(bytes/target) → write the next
+    * generation `<t>__vNNNNN` in full → commit it with ONE manifest PUT
+    * ([[ManifestCommit]]) → re-point the catalog views that named the
+    * retired generation → delete the retired generation. The same
+    * protocol runs on every scheme: on an object store the PUT is the
+    * only safe commit point (rename is a copy+delete), and on a
+    * filesystem with atomic rename it holds as well. Readers see the old
+    * generation or the new one, never a mix or a missing table; a crash
+    * anywhere leaves garbage that the next compact's entry repair
+    * ([[ManifestCommit.repair]]) deletes. A crash between the PUT and the
+    * view re-point leaves those views on the retired generation until
+    * the next compact re-points them. Partitioned layouts keep their
+    * partition columns (re-clustered one file per value, the loader's
+    * write discipline) with directory names preserved verbatim.
     *
-    * Runs through the Hadoop FileSystem API. Two commit strategies by
-    * scheme ([[Loader.objectStoreSchemes]]):
-    *  - filesystems with ATOMIC directory rename (local, HDFS, a custom
-    *    scheme — contract-tested over `graftfs://`): the two-rename
-    *    directory swap below;
-    *  - object stores (s3/gs/abfs/..., where "rename" is a copy+delete
-    *    and the swap loses its crash-safety): the [[ManifestCommit]]
-    *    pointer flip — new generation written in full to a versioned
-    *    sibling dir, committed by one atomic manifest PUT, old
-    *    generation deleted after. Path-based views created BEFORE an
-    *    object-store compaction point at the retired generation;
-    *    recreate them (CostsView.createDurable is idempotent) after.
+    * Directories left by an interrupted two-rename swap of an older
+    * release (`<t>__old`, `<t>__compact`) make it fail without deleting
+    * anything: which of them holds the only copy of some rows depends on
+    * where the crash hit, so the operator decides.
     * Returns (filesBefore, filesAfter). */
   def compact(spark: SparkSession, table: String, targetBytes: Long = 128L << 20): (Int, Int) = {
     require(targetBytes > 0, s"compact targetBytes must be positive, got $targetBytes")
-    val path = new HPath(dir(table))
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    // pick the strategy off the PATH's scheme before resolving the
-    // filesystem, so a mis-deployed connector surfaces as its own
-    // ClassNotFound, not as a wrong commit protocol
-    val scheme = Option(path.toUri.getScheme).orElse(
-      Option(org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoopConf).getScheme))
-      .getOrElse("file")
-    if (Loader.objectStoreSchemes(spark).contains(scheme))
-      return manifestCompact(spark, path, hadoopConf, targetBytes)
-    val fs = path.getFileSystem(hadoopConf)
-    def rm(p: HPath): Unit = { fs.delete(p, true); () }
-    def isDir(p: HPath): Boolean =
-      try fs.getFileStatus(p).isDirectory
-      catch { case _: java.io.FileNotFoundException => false }
-    // Crash recovery from an interrupted previous compaction: the
-    // two-rename swap is not atomic, so repair before starting —
-    //  - `__old` present, table dir gone: the crash hit between retire
-    //    and promote; the retired dir IS the table — rename it back;
-    //  - `__old` present, table present, NO `__compact`: the promote
-    //    succeeded (staging became the table) and only the cleanup was
-    //    lost — finish it;
-    //  - `__old` present, table present, `__compact` ALSO present: the
-    //    table dir was recreated by a LOAD that ran after a
-    //    between-renames crash — `__old` holds the only pre-crash rows
-    //    and the new dir holds post-crash loads. Deleting either loses
-    //    data and merging is a policy call: refuse with instructions
-    //    rather than guess;
-    //  - leftover `__compact` alone: a dead write — discard (its data
-    //    still lives in the table).
-    val retired = new HPath(path.getParent, s"${path.getName}__old")
-    val staging = new HPath(path.getParent, s"${path.getName}__compact")
-    if (isDir(retired) && !isDir(path)) {
-      System.err.println(s"[compact] recovering interrupted swap: restoring $retired")
-      if (!fs.rename(retired, path)) sys.error(s"compact: cannot restore $retired to $path")
-    } else if (isDir(retired) && isDir(staging)) {
-      sys.error(s"compact: found BOTH $retired and $staging next to a live table " +
-        s"directory — a load ran after an interrupted swap, so $retired holds " +
-        s"pre-crash rows absent from $path. Reconcile manually (append $retired's " +
-        s"files into $path, or remove $retired if its rows are obsolete), then re-run")
-    } else if (isDir(retired)) {
-      System.err.println(s"[compact] removing leftover $retired from interrupted cleanup")
-      rm(retired)
+    val base = new HPath(dir(table))
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val old = new HPath(base.getParent, s"${base.getName}__old")
+    val staging = new HPath(base.getParent, s"${base.getName}__compact")
+    Seq(old, staging).find(fs.exists).foreach { left =>
+      sys.error(s"compact: found $left, left by an interrupted two-rename compaction " +
+        "of an older release; nothing was deleted. Fix it by hand, then re-run: if " +
+        s"$base is missing, rename $old back to $base; remove the dead staging dir " +
+        s"$staging; remove $old once its rows are known to be in $base.")
     }
-    if (isDir(staging)) rm(staging)
-    require(isDir(path), s"compact: no such table directory: $path")
-    val before = parquetFilesIn(fs, path)
-    if (before.isEmpty) return (0, 0) // nothing to compact (empty table dir)
-    val (clustered, partCols) = reclustered(spark, path, before, targetBytes)
-    clustered.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCols: _*).parquet(staging.toString)
-    // two-rename swap: retire the old dir, promote staging. NOT atomic —
-    // a crash between the renames leaves `__old` + `__compact` and no
-    // table dir; the recovery block at entry (and any operator following
-    // the same rule: rename `__old` back) repairs that state. Write-phase
-    // failures leave the original untouched.
-    if (!fs.rename(path, retired)) sys.error(s"compact: cannot retire $path")
-    if (!fs.rename(staging, path)) {
-      fs.rename(retired, path) // roll back
-      sys.error(s"compact: cannot promote $staging")
-    }
-    rm(retired)
-    (before.size, parquetFilesIn(fs, path).size)
-  }
-
-  /** Object-store flavor of [[compact]]: same read+recluster, committed
-    * by the [[ManifestCommit]] pointer flip instead of directory
-    * renames. Entry repair discards dead writes / finishes lost
-    * cleanups; the manifest overwrite is the single atomic commit
-    * point, so there is NO window with a missing live directory. */
-  private def manifestCompact(spark: SparkSession, base: HPath,
-      hadoopConf: org.apache.hadoop.conf.Configuration, targetBytes: Long): (Int, Int) = {
-    val fs = base.getFileSystem(hadoopConf)
     val data = ManifestCommit.repair(fs, base)
     require(fs.exists(data) && fs.getFileStatus(data).isDirectory,
       s"compact: no such table directory: $data")
     val before = parquetFilesIn(fs, data)
-    if (before.isEmpty) return (0, 0)
+    if (before.isEmpty) return (0, 0) // nothing to compact (empty table dir)
     val (clustered, partCols) = reclustered(spark, data, before, targetBytes)
     val next = ManifestCommit.currentVersion(fs, base).getOrElse(0L) + 1
     val target = ManifestCommit.versionDir(base, next)
@@ -527,11 +445,32 @@ final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
     // replaced by the Overwrite below
     clustered.write.mode(SaveMode.Overwrite)
       .partitionBy(partCols: _*).parquet(target.toString)
-    ManifestCommit.commit(fs, base, next) // THE commit: one manifest PUT
-    System.err.println(s"[compact] $base now serves from $target; " +
-      "recreate path-based views created before this compaction")
+    ManifestCommit.record.write(fs, base, next) // THE commit: one manifest PUT
+    repointViews(spark, base, target)
     fs.delete(data, true) // best-effort; a lost cleanup is repaired on next entry
     (before.size, parquetFilesIn(fs, target).size)
+  }
+
+  /** Re-point every persistent catalog view whose definition names a
+    * retired generation of `base` (the base dir or any `__vNNNNN`
+    * sibling, as [[sqlRef]] wrote it) at `live`. Compaction moves the
+    * live directory, and a path-based view such as Sync's durable
+    * `costs` ([[CostsView.createDurable]]) would otherwise read a
+    * deleted one. `ALTER VIEW` keeps each view's other properties. */
+  private def repointViews(spark: SparkSession, base: HPath, live: HPath): Unit = {
+    val catalog = spark.sessionState.catalog
+    def retired(p: HPath) = p != live && p.getParent == base.getParent &&
+      (p.getName == base.getName || ManifestCommit.record.number(base, p.getName).isDefined)
+    for {
+      db <- catalog.listDatabases()
+      view <- catalog.listViews(db, "*") if !catalog.isTempView(view)
+      text <- catalog.getTableMetadata(view).viewText
+      repointed = ParquetRef.replaceAllIn(text, m =>
+        scala.util.matching.Regex.quoteReplacement(
+          if (retired(new HPath(m.group(1).replace("``", "`")))) sqlRefOf(live.toString)
+          else m.matched))
+      if repointed != text
+    } spark.sql(s"ALTER VIEW ${view.quotedString} AS $repointed")
   }
 
   /** Recursive leaf-file listing (partition dirs included). */
@@ -595,16 +534,19 @@ final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
     (clustered, partCols)
   }
 
-  override def sqlRef(table: String): Option[String] = {
+  override def sqlRef(table: String): Option[String] =
     // resolve through the manifest when a session is at hand, so a view
-    // created AFTER an object-store compaction names the live generation
-    val resolved = SparkSession.getActiveSession
-      .map(s => dataDir(s, table)).getOrElse(dir(table))
-    // backticks inside a backtick-quoted identifier escape by doubling —
-    // an adversarial warehouse path cannot break out of (or inject into)
-    // the view DDL this ref is interpolated into
-    Some(s"parquet.`${resolved.replace("`", "``")}`")
-  }
+    // created after a compaction names the live generation
+    Some(sqlRefOf(SparkSession.getActiveSession
+      .map(s => dataDir(s, table)).getOrElse(dir(table))))
+
+  // backticks inside a backtick-quoted identifier escape by doubling —
+  // an adversarial warehouse path cannot break out of (or inject into)
+  // the view DDL this ref is interpolated into
+  private def sqlRefOf(path: String): String = s"parquet.`${path.replace("`", "``")}`"
+
+  /** A [[sqlRefOf]] reference inside view text; group 1 is the escaped path. */
+  private val ParquetRef = "parquet\\.`((?:[^`]|``)*)`".r
 
   override def runSqlScript(spark: SparkSession, path: String): Unit =
     statements(new String(java.nio.file.Files.readAllBytes(

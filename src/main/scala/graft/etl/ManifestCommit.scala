@@ -2,36 +2,35 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
-/** Manifest/pointer commit for table rewrites on filesystems WITHOUT
-  * atomic directory rename (object stores: s3/s3a/gs/abfs/..., where
-  * "rename" is a copy+delete and [[ParquetLoader.compact]]'s two-rename
-  * swap loses its crash-safety).
+/** Manifest/pointer commit for table rewrites — the one commit protocol
+  * of [[ParquetLoader.compact]] on every filesystem. It is built for
+  * object stores (s3/s3a/gs/abfs/..., where "rename" is a copy+delete, so
+  * no directory swap is crash-safe) and holds on filesystems with atomic
+  * rename too.
   *
   * Layout: the live data directory is either the base table dir
   * (`.../table`, no manifest — every table starts here) or a versioned
   * sibling (`.../table__v00001`) named by a tiny manifest object
-  * (`.../table__manifest`) holding the current version number. A rewrite
-  * writes the new generation to `table__v(N+1)` in full, then COMMITS by
-  * overwriting the manifest — on a real object store a single-object PUT
-  * is atomic and strongly consistent (S3 consistency model; the same
-  * last-file-wins commit point Iceberg/Delta build on), so readers
-  * resolve either wholly-old or wholly-new data, never a mix. The
-  * retired generation is deleted after the flip; losing that cleanup to
-  * a crash leaves garbage, never wrong results.
+  * (`.../table__manifest`) holding the current version number in the
+  * shared [[PointerRecord]] format. A rewrite writes the new generation to
+  * `table__v(N+1)` in full, then COMMITS by overwriting the manifest — on
+  * a real object store a single-object PUT is atomic and strongly
+  * consistent (S3 consistency model; the same last-file-wins commit point
+  * Iceberg/Delta build on), so readers resolve either wholly-old or
+  * wholly-new data, never a mix. The retired generation is deleted after
+  * the flip; losing that cleanup to a crash leaves garbage, never wrong
+  * results.
   *
-  * Crash repair (run on entry, mirroring the rename path's recovery
-  * block): version dirs OTHER than the manifest's current one are
-  * dead writes (higher version: crash before the flip — the manifest
-  * never pointed at them) or lost cleanups (lower version / leftover
-  * base dir: crash after the flip — all post-flip loads resolve to the
-  * current dir, so the old one is strictly obsolete). Both delete
-  * safely. Unlike the rename swap there is NO window where the live
-  * directory is missing, so the rename path's refuse-and-reconcile case
-  * (a load recreating the table dir mid-swap) cannot arise: the flip IS
-  * the commit point, and loads before/after it land in the generation
-  * readers resolve. The operational contract shared with the rename
-  * path stands: no concurrent loads DURING a compaction (rows appended
-  * to the old generation while the rewrite runs are not in the new one).
+  * Crash repair (run on entry): version dirs OTHER than the manifest's
+  * current one are dead writes (higher version: crash before the flip —
+  * the manifest never pointed at them) or lost cleanups (lower version /
+  * leftover base dir: crash after the flip — all post-flip loads resolve
+  * to the current dir, so the old one is strictly obsolete). Both delete
+  * safely. There is NO window where the live directory is missing: the
+  * flip IS the commit point, and loads before/after it land in the
+  * generation readers resolve. Operational contract: no concurrent loads
+  * DURING a compaction (rows appended to the old generation while the
+  * rewrite runs are not in the new one).
   *
   * Reference behavior this serves: the reference stores its warehouse
   * on exactly such a filesystem (s3, reference src/sources/aws_cur.py:60-66)
@@ -39,50 +38,24 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * that storage class needs this commit shape.
   *
   * Naming contract: `table__manifest` and `table__vNNNNN` are RESERVED
-  * sibling names (like the rename path's `__old`/`__compact`) — a user
-  * table whose name ends in `__vNNNNN` next to a same-prefix table
-  * would be mistaken for a retired generation — don't name tables that
-  * way (identifier normalization only yields a `__` pair if the source
-  * name itself carries doubled separators). Concurrency contract: ONE
-  * compactor per table at a time
-  * (two concurrent compacts would race writes to the same next
-  * generation dir) — the same single-maintainer assumption the
-  * two-rename swap carries.
+  * sibling names — a user table whose name ends in `__vNNNNN` next to a
+  * same-prefix table would be mistaken for a retired generation — don't
+  * name tables that way (identifier normalization only yields a `__` pair
+  * if the source name itself carries doubled separators). Concurrency
+  * contract: ONE compactor per table at a time (two concurrent compacts
+  * would race writes to the same next generation dir).
   */
 private[etl] object ManifestCommit {
 
-  def manifestPath(base: HPath): HPath =
-    new HPath(base.getParent, s"${base.getName}__manifest")
+  /** A torn manifest (see [[PointerRecord.TornRecordException]]) makes
+    * readers throw with this guidance; [[repair]] recovers from it. */
+  private[etl] val record = new PointerRecord('v', "manifest", width = 5, first = 1,
+    "Data dirs are intact; run `compact <table>` (repair runs unconditionally on " +
+      "entry) to re-point the manifest at the highest surviving generation.")
 
-  def versionDir(base: HPath, v: Long): HPath =
-    new HPath(base.getParent, f"${base.getName}__v$v%05d")
+  def manifestPath(base: HPath): HPath = record.path(base)
 
-  /** A manifest that exists but does not hold a complete `v<N>\n` record:
-    * the signature of a TORN commit — a crash between `fs.create` and
-    * `close` on a filesystem where creates are visible before close
-    * (real object stores flip atomically on PUT; `file://` and other
-    * conf-flagged schemes do not). Readers surface this with recovery
-    * guidance instead of an opaque NumberFormatException; [[repair]]
-    * recovers from it. */
-  final class TornManifestException(val manifest: HPath, txt: String)
-    extends RuntimeException(
-      s"manifest $manifest is empty, unparsable or missing its terminator " +
-        s"('$txt') — a torn commit on a non-atomic filesystem. Data dirs are " +
-        "intact; run `compact <table>` (repair runs unconditionally on entry) " +
-        "to re-point the manifest at the highest surviving generation.")
-
-  /** Parse a raw manifest record. Format: `v<digits>\n` — the leading tag
-    * and the trailing newline are begin/end markers, so a torn write that
-    * persists any proper PREFIX of the record (e.g. `v1` out of `v12\n`,
-    * which a bare-digits format would accept as version 1 and then let
-    * [[repair]] delete the REAL generation 12 as a dead write) is
-    * detected as torn instead of parsed as a smaller valid version. */
-  private[etl] def parseManifest(raw: String): Option[Long] =
-    if (raw.length >= 3 && raw.head == 'v' && raw.last == '\n') {
-      val body = raw.substring(1, raw.length - 1)
-      if (body.nonEmpty && body.forall(_.isDigit)) body.toLongOption.filter(_ > 0)
-      else None
-    } else None
+  def versionDir(base: HPath, v: Long): HPath = record.dir(base, v)
 
   /** Parse a LEGACY (pre-`v<N>\n`) bare-digits manifest record:
     * digits with optional trailing newline, nothing else. A candidate
@@ -112,35 +85,25 @@ private[etl] object ManifestCommit {
     * strictly LOWER than the true version (a proper digit prefix has
     * fewer digits), so a legacy pointer with only lower generations
     * beside it is safe to trust. Read paths leave an accepted legacy
-    * record in place (no write on read); the next [[commit]] rewrites
-    * it in `v<N>\n` form. Throws [[TornManifestException]] on an
-    * empty/truncated/unparsable manifest. */
-  def currentVersion(fs: FileSystem, base: HPath): Option[Long] = {
-    val mp = manifestPath(base)
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      val raw =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-      parseManifest(raw)
-        .orElse(parseLegacy(raw).filter(v => fs.exists(versionDir(base, v))))
-        match {
-          case some @ Some(v) if parseManifest(raw).isEmpty =>
-            val higher = listVersionDirs(fs, base).map(_._1).filter(_ > v)
-            if (higher.nonEmpty)
-              sys.error(s"manifest $mp holds a legacy bare-digits record '$v' " +
-                s"while strictly higher generation dir(s) ${higher.sorted.mkString(", ")} " +
-                "exist — a torn legacy record whose generation survived a lost cleanup " +
-                "is indistinguishable from an intact one, so neither resolve nor repair " +
-                "will proceed (and nothing is deleted); inspect the generations and " +
-                "rewrite the manifest as 'v<N>\\n' naming the true current version")
-            some
-          case some @ Some(_) => some
-          case None => throw new TornManifestException(mp, raw.trim)
-        }
+    * record in place (no write on read); the next commit rewrites
+    * it in `v<N>\n` form. Throws [[PointerRecord.TornRecordException]]
+    * on an empty/truncated/unparsable manifest. */
+  def currentVersion(fs: FileSystem, base: HPath): Option[Long] =
+    record.read(fs, base).map { raw =>
+      record.parse(raw).getOrElse {
+        val v = parseLegacy(raw).filter(v => fs.exists(versionDir(base, v)))
+          .getOrElse(throw record.torn(base, raw))
+        val higher = record.dirs(fs, base).map(_._1).filter(_ > v)
+        if (higher.nonEmpty)
+          sys.error(s"manifest ${manifestPath(base)} holds a legacy bare-digits record '$v' " +
+            s"while strictly higher generation dir(s) ${higher.sorted.mkString(", ")} " +
+            "exist — a torn legacy record whose generation survived a lost cleanup " +
+            "is indistinguishable from an intact one, so neither resolve nor repair " +
+            "will proceed (and nothing is deleted); inspect the generations and " +
+            "rewrite the manifest as 'v<N>\\n' naming the true current version")
+        v
+      }
     }
-  }
 
   /** The directory readers and writers should use: the manifest's
     * version dir when committed, the base dir otherwise. Self-describing
@@ -150,22 +113,10 @@ private[etl] object ManifestCommit {
   def resolve(fs: FileSystem, base: HPath): HPath =
     currentVersion(fs, base).map(versionDir(base, _)).getOrElse(base)
 
-  /** All `table__vNNNNN` sibling dirs, with their version numbers. */
-  def listVersionDirs(fs: FileSystem, base: HPath): Seq[(Long, HPath)] = {
-    val prefix = s"${base.getName}__v"
-    if (!fs.exists(base.getParent)) Seq.empty
-    else fs.listStatus(base.getParent).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap { s =>
-        val suffix = s.getPath.getName.drop(prefix.length)
-        suffix.toLongOption.map(v => (v, s.getPath))
-      }
-  }
-
   /** Repair interrupted rewrites; returns the live data dir. A torn
-    * manifest (see [[TornManifestException]]) re-commits the highest
-    * surviving generation — or deletes the manifest to fall back to the
-    * base dir when no generation exists — BEFORE the cleanup pass, so
+    * manifest re-commits the highest surviving generation — or deletes
+    * the manifest to fall back to the base dir when none exists
+    * ([[PointerRecord.recommitHighest]]) — BEFORE the cleanup pass, so
     * the table is readable again without manual intervention. Fails only
     * when an intact manifest names a directory that does not exist —
     * that is data loss from outside interference, not a crash window
@@ -174,22 +125,13 @@ private[etl] object ManifestCommit {
     val cur =
       try currentVersion(fs, base)
       catch {
-        case torn: TornManifestException =>
-          val best = listVersionDirs(fs, base).map(_._1).maxOption
-          best match {
-            case Some(v) =>
-              System.err.println(s"[compact] ${torn.getMessage}")
-              System.err.println(s"[compact] re-committing highest surviving generation $v")
-              commit(fs, base, v)
-            case None =>
-              System.err.println(s"[compact] ${torn.getMessage}")
-              System.err.println(s"[compact] no surviving generation — reverting to base dir")
-              fs.delete(torn.manifest, false)
-              if (!fs.exists(base))
-                sys.error(s"compact: torn manifest ${torn.manifest} had no surviving " +
-                  s"generation and the base directory $base is also missing — no data " +
-                  "to fall back to; restore the table from a backup")
-          }
+        case torn: PointerRecord.TornRecordException =>
+          System.err.println(s"[compact] ${torn.getMessage}")
+          val best = record.recommitHighest(fs, base, "compact")
+          if (best.isEmpty && !fs.exists(base))
+            sys.error(s"compact: torn manifest ${torn.record} had no surviving " +
+              s"generation and the base directory $base is also missing — no data " +
+              "to fall back to; restore the table from a backup")
           best
       }
     // Verify the pointer BEFORE any deletion: when the manifest names a
@@ -203,7 +145,7 @@ private[etl] object ManifestCommit {
           "not exist — the committed generation was removed out-of-band; restore it " +
           "or delete the manifest to fall back to the base directory")
     }
-    listVersionDirs(fs, base).foreach { case (v, p) =>
+    record.dirs(fs, base).foreach { case (v, p) =>
       if (!cur.contains(v)) {
         System.err.println(s"[compact] discarding ${if (cur.exists(_ > v)) "stale generation" else "dead write"} $p")
         fs.delete(p, true)
@@ -220,13 +162,5 @@ private[etl] object ManifestCommit {
         versionDir(base, v)
       case None => base
     }
-  }
-
-  /** Commit generation `v`: overwrite the manifest object with the
-    * terminated record `v<N>\n` (see [[parseManifest]]). One PUT — the
-    * atomic commit point. */
-  def commit(fs: FileSystem, base: HPath, v: Long): Unit = {
-    val out = fs.create(manifestPath(base), true)
-    try out.write(s"v$v\n".getBytes("UTF-8")) finally out.close()
   }
 }

@@ -4,6 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.etl.PointerRecord
+import graft.etl.PointerRecord.{TornRecordException, readObject, writeObject}
+
 /** Exactly-once streaming parquet sink for filesystems WITHOUT atomic
   * rename (object stores) — the streaming counterpart of
   * [[graft.etl.ManifestCommit]].
@@ -14,8 +17,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * append-mode write run twice doubles those rows. Spark's built-in
   * file sink solves this with its `_spark_metadata` log; the warehouse
   * drain here needs the same property under the repo's own manifest
-  * idiom so batch compaction ([[graft.etl.ManifestCommit]]) and the
-  * streaming drain share one commit vocabulary.
+  * idiom: the ledger is a [[graft.etl.PointerRecord]], the same
+  * one-object record, torn-record check and writer-side repair as the
+  * table manifest of batch compaction ([[graft.etl.ManifestCommit]]).
   *
   * Layout: each micro-batch writes its rows to an OWN generation dir
   * (`table__b<id>`, a reserved sibling name like the compactor's
@@ -33,7 +37,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *  - crash mid-data-write: the partial dir's id is above the ledger —
   *    invisible to readers; replay overwrites the dir, then commits;
   *  - crash mid-ledger-PUT on a non-atomic filesystem: the ledger is
-  *    torn ([[TornLedgerException]]); the replayed batch repairs it —
+  *    torn; the replayed batch repairs it —
   *    everything below the replayed id was checkpoint-committed, hence
   *    ledger-committed first (the ledger PUT precedes Spark's offset
   *    commit), so rewriting the in-flight dir and re-committing its id
@@ -53,50 +57,20 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object ExactlyOnce {
 
-  private[graft] def ledgerPath(base: HPath): HPath =
-    new HPath(base.getParent, s"${base.getName}__stream_commits")
+  /** A torn ledger ([[graft.etl.PointerRecord.TornRecordException]], a
+    * torn commit PUT) reports this guidance; the replayed micro-batch
+    * repairs it (see class doc). */
+  private[graft] val record = new PointerRecord('b', "stream_commits",
+    width = 9, first = 0, "Batch dirs are intact; restarting the stream on its " +
+      "checkpoint replays the in-flight batch and re-commits the ledger.")
 
-  private[graft] def batchDir(base: HPath, id: Long): HPath =
-    new HPath(base.getParent, f"${base.getName}__b$id%09d")
+  private[graft] def ledgerPath(base: HPath): HPath = record.path(base)
 
-  /** A ledger that exists but does not hold a complete `b<N>\n` record:
-    * a torn commit PUT. Readers surface it with guidance; the replayed
-    * micro-batch repairs it (see class doc). */
-  final class TornLedgerException(val ledger: HPath, txt: String)
-    extends RuntimeException(
-      s"stream ledger $ledger is empty, unparsable or missing its " +
-        s"terminator ('$txt') — a torn commit on a non-atomic filesystem. " +
-        "Batch dirs are intact; restarting the stream on its checkpoint " +
-        "replays the in-flight batch and re-commits the ledger.")
-
-  /** Parse a raw ledger record. Format: `b<digits>\n` — begin/end
-    * markers make any torn PREFIX detectable instead of readable as a
-    * smaller valid id (the failure mode [[graft.etl.ManifestCommit]]
-    * closes for the table manifest; id 0 is valid here, the first
-    * micro-batch). */
-  private[streaming] def parseLedger(raw: String): Option[Long] =
-    if (raw.length >= 3 && raw.head == 'b' && raw.last == '\n') {
-      val body = raw.substring(1, raw.length - 1)
-      if (body.nonEmpty && body.forall(_.isDigit)) body.toLongOption
-      else None
-    } else None
+  private[graft] def batchDir(base: HPath, id: Long): HPath = record.dir(base, id)
 
   /** Highest committed batch id, if any batch has committed. Throws
-    * [[TornLedgerException]] on a truncated/unparsable ledger. */
-  def lastCommitted(fs: FileSystem, base: HPath): Option[Long] = {
-    val lp = ledgerPath(base)
-    if (!fs.exists(lp)) None
-    else {
-      val in = fs.open(lp)
-      val raw =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
-      parseLedger(raw) match {
-        case some @ Some(_) => some
-        case None => throw new TornLedgerException(lp, raw.trim)
-      }
-    }
-  }
+    * on a truncated/unparsable ledger. */
+  def lastCommitted(fs: FileSystem, base: HPath): Option[Long] = record.current(fs, base)
 
   private def schemaPath(base: HPath): HPath =
     new HPath(base.getParent, s"${base.getName}__schema.json")
@@ -110,28 +84,7 @@ object ExactlyOnce {
   private def persistSchema(fs: FileSystem, base: HPath,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val sp = schemaPath(base)
-    if (!fs.exists(sp)) {
-      val out = fs.create(sp, true)
-      try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  /** Commit batch `id`: one ledger PUT — the atomic commit point. */
-  private[graft] def commitLedger(fs: FileSystem, base: HPath, id: Long): Unit = {
-    val out = fs.create(ledgerPath(base), true)
-    try out.write(s"b$id\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** All `table__b*` sibling dirs with their batch ids. */
-  private[graft] def listBatchDirs(fs: FileSystem, base: HPath): Seq[(Long, HPath)] = {
-    val prefix = s"${base.getName}__b"
-    if (!fs.exists(base.getParent)) Seq.empty
-    else fs.listStatus(base.getParent).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap { s =>
-        val suffix = s.getPath.getName.drop(prefix.length)
-        suffix.toLongOption.map(v => (v, s.getPath))
-      }
+    if (!fs.exists(sp)) writeObject(fs, sp, schema.json)
   }
 
   /** Committed generation dirs under `anchor` in id order, for batch
@@ -149,12 +102,12 @@ object ExactlyOnce {
     val lastOpt =
       try lastCommitted(fs, anchor)
       catch {
-        case torn: TornLedgerException =>
+        case torn: TornRecordException =>
           System.err.println(s"[append-ledger] ${torn.getMessage}")
-          listBatchDirs(fs, anchor).map(_._1).maxOption
+          record.dirs(fs, anchor).map(_._1).maxOption
       }
     lastOpt match {
-      case Some(last) => listBatchDirs(fs, anchor)
+      case Some(last) => record.dirs(fs, anchor)
         .filter(_._1 <= last).sortBy(_._1)
       case None => Seq.empty
     }
@@ -172,10 +125,8 @@ object ExactlyOnce {
 
   private def compactionMarker(gen: HPath): HPath = new HPath(gen, CompactionMarkerName)
 
-  private[graft] def markCompaction(fs: FileSystem, gen: HPath): Unit = {
-    val out = fs.create(compactionMarker(gen), true)
-    try out.write("compaction\n".getBytes("UTF-8")) finally out.close()
-  }
+  private[graft] def markCompaction(fs: FileSystem, gen: HPath): Unit =
+    writeObject(fs, compactionMarker(gen), "compaction\n")
 
   private[graft] def isCompaction(fs: FileSystem, gen: HPath): Boolean =
     fs.exists(compactionMarker(gen))
@@ -240,8 +191,7 @@ object ExactlyOnce {
       "stream lineage keys must be non-empty and newline-free")
     val body = tags.toSeq.sortBy(_._1)
       .map { case (lineage, id) => s"b$id $lineage\n" }.mkString
-    val out = fs.create(streamTagPath(gen), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeObject(fs, streamTagPath(gen), body)
   }
 
   /** Watermarks of a committed generation (empty map when untagged —
@@ -251,12 +201,7 @@ object ExactlyOnce {
     * silently re-admitting a replayed batch. */
   private[graft] def readStreamTags(fs: FileSystem, gen: HPath): Map[String, Long] = {
     val p = streamTagPath(gen)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val raw =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
+    readObject(fs, p).fold(Map.empty[String, Long]) { raw =>
       // an EXISTING but empty/garbled tag file is interference, and the
       // failure direction matters: an ignored tag replays an admitted
       // batch as fresh (silent double-admit), so err loud
@@ -283,18 +228,9 @@ object ExactlyOnce {
     val last =
       try lastCommitted(fs, anchor)
       catch {
-        case torn: TornLedgerException =>
-          val best = listBatchDirs(fs, anchor).map(_._1).maxOption
+        case torn: TornRecordException =>
           System.err.println(s"[append-ledger] ${torn.getMessage}")
-          best match {
-            case Some(v) =>
-              System.err.println(s"[append-ledger] re-committing intact staged generation $v")
-              commitLedger(fs, anchor, v)
-            case None =>
-              System.err.println("[append-ledger] no staged generation — discarding torn ledger")
-              fs.delete(ledgerPath(anchor), false)
-          }
-          best
+          record.recommitHighest(fs, anchor, "append-ledger")
       }
     last.map(_ + 1).getOrElse(0L)
   }
@@ -314,7 +250,7 @@ object ExactlyOnce {
     val last =
       try lastCommitted(fs, base)
       catch {
-        case torn: TornLedgerException =>
+        case torn: TornRecordException =>
           // replaying batch N ⇒ every id < N was ledger-committed before
           // Spark checkpointed it; the torn PUT was for N itself (or a
           // re-PUT of an older id, equally subsumed). Repair by falling
@@ -328,7 +264,7 @@ object ExactlyOnce {
       persistSchema(fs, base, batch.schema)
       if (!batch.isEmpty)
         batch.write.mode("overwrite").parquet(batchDir(base, batchId).toString)
-      commitLedger(fs, base, batchId)
+      record.write(fs, base, batchId) // the commit: one ledger PUT
       true
     }
   }
@@ -345,19 +281,15 @@ object ExactlyOnce {
     val last = lastCommitted(fs, base).getOrElse(
       sys.error(s"stream sink $baseDir has no committed batches " +
         s"(no ledger at ${ledgerPath(base)})"))
-    val dirs = listBatchDirs(fs, base)
+    val dirs = record.dirs(fs, base)
       .filter(_._1 <= last).map(_._2.toString).sorted
     if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
     else {
       val sp = schemaPath(base)
-      if (!fs.exists(sp))
+      val raw = readObject(fs, sp).getOrElse(
         sys.error(s"stream sink $baseDir committed only empty batches and " +
           s"has no schema sidecar at $sp (pre-schema-sidecar sink?) — " +
-          "no schema to type the empty result with")
-      val in = fs.open(sp)
-      val raw =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        finally in.close()
+          "no schema to type the empty result with"))
       val schema = org.apache.spark.sql.types.DataType.fromJson(raw)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       spark.createDataFrame(

@@ -111,7 +111,7 @@ final class Generations(fs: FileSystem, anchor: HPath) {
     stage(gen)
     if (tags.nonEmpty) writeStreamTags(fs, gen, tags)
     if (compaction) markCompaction(fs, gen)
-    commitLedger(fs, anchor, id)
+    record.write(fs, anchor, id) // the commit: one ledger PUT
   }
 
   /** Reclaim what the newest committed compaction subsumes: every

@@ -98,40 +98,76 @@ class LoaderSpec extends SparkSpec {
     val rows = Seq((1L, "01"), (2L, "01"), (3L, "10")).toDF("id", "month")
     (1 to 3).foreach(_ => ld.load(rows, "padded", "append", partitionBy = Seq("month")))
     ld.compact(spark, "padded")
-    val dirs = new java.io.File(s"$wh/s/padded").listFiles()
+    val dirs = new java.io.File(s"$wh/s/padded__v00001").listFiles()
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
     assert(dirs == Seq("month=01", "month=10"), dirs.mkString(","))
     assert(ld.table(spark, "padded").count() == 9)
   }
 
   test("ParquetLoader: compact repairs an interrupted swap before running") {
+    // the swap is the first generation flip of a never-compacted table:
+    // write <t>__v00001, PUT the manifest, re-point views, delete <t>
     val wh = Files.createTempDirectory("graft_wh").toString
     val ld = new ParquetLoader(wh, "s")
     ld.ensureNamespace()
     ld.load(df2, "r", "replace")
     val tdir = new java.io.File(s"$wh/s/r")
-    val old = new java.io.File(s"$wh/s/r__old")
-    // crash between retire and promote: table dir gone, data in __old
-    assert(tdir.renameTo(old))
+    val gen1 = new java.io.File(s"$wh/s/r__v00001")
+    val conf = spark.sessionState.newHadoopConf()
+    val base = new org.apache.hadoop.fs.Path(tdir.getPath)
+    val fs = base.getFileSystem(conf)
+    val gen1Path = new org.apache.hadoop.fs.Path(gen1.getPath)
+    // crash before the PUT: a dead write, no manifest; reads stay on <t>
+    assert(gen1.mkdirs())
+    Files.write(gen1.toPath.resolve("part-dead.parquet"), "junk".getBytes)
+    assert(ld.table(spark, "r").count() == 2L, "dead write must be invisible")
     ld.compact(spark, "r")
-    assert(tdir.isDirectory && !old.exists)
-    assert(ld.table(spark, "r").count() == 2)
-    // crash after promote, cleanup lost (NO staging left): stale __old
-    // is finished off
-    assert(old.mkdirs())
-    ld.compact(spark, "r")
-    assert(!old.exists)
-    assert(ld.table(spark, "r").count() == 2)
-    // a load ran AFTER a between-renames crash: __old + __compact + a
-    // live (recreated) table dir — __old holds the only pre-crash rows,
-    // so compact must refuse rather than delete either side
-    assert(old.mkdirs())
-    val staging = new java.io.File(s"$wh/s/r__compact")
-    assert(staging.mkdirs())
-    val err = intercept[RuntimeException] { ld.compact(spark, "r") }
-    assert(err.getMessage.contains("Reconcile manually"), err.getMessage)
-    assert(old.exists && tdir.isDirectory) // nothing deleted
-    assert(old.delete() && staging.delete()) // operator reconciles; compact ok again
+    assert(ld.table(spark, "r").count() == 2L, "dead write must not leak rows")
+    assert(gen1.isDirectory && !tdir.exists)
+    assert(!new java.io.File(gen1, "part-dead.parquet").exists)
+    // crash between the PUT and the view re-point: the manifest names the
+    // new generation while <t> and a view over <t> remain
+    assert(fs.delete(gen1Path, true))
+    assert(new java.io.File(s"$wh/s/r__manifest").delete())
+    ld.load(df2, "r", "replace")
+    spark.sql(s"CREATE OR REPLACE VIEW r_swap_v AS SELECT * FROM ${ld.sqlRef("r").get}")
+    try {
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, base, fs, gen1Path, false, conf))
+      ManifestCommit.record.write(fs, base, 1)
+      val files = ld.table(spark, "r").inputFiles
+      assert(files.nonEmpty && files.forall(_.contains("r__v00001")), files.mkString(", "))
+      ld.compact(spark, "r") // -> generation 2, <t> and generation 1 gone
+      assert(!tdir.exists && !gen1.exists && new java.io.File(s"$wh/s/r__v00002").isDirectory)
+      assert(ld.table(spark, "r").count() == 2L)
+      assert(spark.table("r_swap_v").count() == 2L, "the view must follow the flip")
+    } finally spark.sql("DROP VIEW IF EXISTS r_swap_v")
+  }
+
+  test("ParquetLoader: compact refuses leftovers of the old two-rename swap and deletes nothing") {
+    val wh = Files.createTempDirectory("graft_wh").toString
+    val ld = new ParquetLoader(wh, "s")
+    ld.ensureNamespace()
+    ld.load(df2, "r", "replace")
+    val tdir = new java.io.File(s"$wh/s/r")
+    def listing = new java.io.File(s"$wh/s").list().sorted.toSeq
+    // a crash of the old swap left either dir behind; which one holds the
+    // only copy of some rows depends on where it hit, so compact names the
+    // dir and the manual fix instead of guessing
+    for (leftover <- Seq("r__old", "r__compact")) {
+      val left = new java.io.File(s"$wh/s/$leftover")
+      assert(left.mkdirs())
+      Files.write(left.toPath.resolve("part-0.parquet"), "rows".getBytes)
+      val before = listing
+      val err = intercept[RuntimeException] { ld.compact(spark, "r") }
+      assert(err.getMessage.contains(left.getPath), err.getMessage)
+      assert(err.getMessage.contains("rename") && err.getMessage.contains("dead staging dir"),
+        err.getMessage)
+      assert(listing == before && left.listFiles().length == 1 && tdir.isDirectory,
+        "nothing may be deleted or moved")
+      // the operator's fix (here: the dir is dead) lets compact run again
+      Option(left.listFiles()).foreach(_.foreach(_.delete()))
+      assert(left.delete())
+    }
     ld.compact(spark, "r")
     assert(ld.table(spark, "r").count() == 2)
   }
@@ -139,123 +175,160 @@ class LoaderSpec extends SparkSpec {
   test("ParquetLoader: manifest compact flips generations; reads/appends/views follow") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // flag file: as an object-store scheme for this test — the same conf
-    // hook a deployment uses for a custom copy-rename FileSystem; unset
-    // in finally so other suites' compacts keep the rename path
-    spark.conf.set("graft.compact.objectStoreSchemes", "file")
-    try {
-      val wh = Files.createTempDirectory("graft_wh_m").toString
-      val ld = new ParquetLoader(wh, "s")
-      ld.ensureNamespace()
-      val rows = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(4)
-      (1 to 4).foreach(_ => ld.load(rows, "m", "append"))
-      val (b, a) = ld.compact(spark, "m")
-      assert(b > a && a >= 1, s"$b -> $a")
-      // base dir retired, generation 1 live, manifest committed
-      assert(!new java.io.File(s"$wh/s/m").exists)
-      assert(new java.io.File(s"$wh/s/m__v00001").isDirectory)
-      assert(new java.io.File(s"$wh/s/m__manifest").isFile)
-      val back = ld.table(spark, "m")
-      assert(back.count() == 200L)
-      assert(back.agg(sum(col("id"))).collect().head.getLong(0) == 4L * (1 to 50).sum)
-      assert(back.inputFiles.forall(_.contains("m__v00001")), "reads must resolve via manifest")
-      // appends land in the LIVE generation, not the retired base dir
-      ld.load(rows, "m", "append")
-      assert(ld.table(spark, "m").count() == 250L)
-      assert(!new java.io.File(s"$wh/s/m").exists, "append must not resurrect the base dir")
-      // second compact: generation 2, generation 1 retired
-      ld.compact(spark, "m")
-      assert(new java.io.File(s"$wh/s/m__v00002").isDirectory)
-      assert(!new java.io.File(s"$wh/s/m__v00001").exists)
-      assert(ld.table(spark, "m").count() == 250L)
-      // a view created after the flip names the live generation
-      assert(ld.sqlRef("m").get.contains("m__v00002"), ld.sqlRef("m").get)
-    } finally spark.conf.unset("graft.compact.objectStoreSchemes")
+    val wh = Files.createTempDirectory("graft_wh_m").toString
+    val ld = new ParquetLoader(wh, "s")
+    ld.ensureNamespace()
+    val rows = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(4)
+    (1 to 4).foreach(_ => ld.load(rows, "m", "append"))
+    val (b, a) = ld.compact(spark, "m")
+    assert(b > a && a >= 1, s"$b -> $a")
+    // base dir retired, generation 1 live, manifest committed
+    assert(!new java.io.File(s"$wh/s/m").exists)
+    assert(new java.io.File(s"$wh/s/m__v00001").isDirectory)
+    assert(new java.io.File(s"$wh/s/m__manifest").isFile)
+    val back = ld.table(spark, "m")
+    assert(back.count() == 200L)
+    assert(back.agg(sum(col("id"))).collect().head.getLong(0) == 4L * (1 to 50).sum)
+    assert(back.inputFiles.forall(_.contains("m__v00001")), "reads must resolve via manifest")
+    // appends land in the LIVE generation, not the retired base dir
+    ld.load(rows, "m", "append")
+    assert(ld.table(spark, "m").count() == 250L)
+    assert(!new java.io.File(s"$wh/s/m").exists, "append must not resurrect the base dir")
+    // second compact: generation 2, generation 1 retired
+    ld.compact(spark, "m")
+    assert(new java.io.File(s"$wh/s/m__v00002").isDirectory)
+    assert(!new java.io.File(s"$wh/s/m__v00001").exists)
+    assert(ld.table(spark, "m").count() == 250L)
+    // a view created after the flip names the live generation
+    assert(ld.sqlRef("m").get.contains("m__v00002"), ld.sqlRef("m").get)
   }
 
   test("ParquetLoader: manifest compact repairs every crash window on entry") {
     import spark.implicits._
-    spark.conf.set("graft.compact.objectStoreSchemes", "file")
-    try {
-      val wh = Files.createTempDirectory("graft_wh_mc").toString
-      val ld = new ParquetLoader(wh, "s")
-      ld.ensureNamespace()
-      ld.load(df2, "m", "replace")
-      ld.compact(spark, "m") // baseline: generation 1 live
-      def gen(n: Int) = new java.io.File(f"$wh/s/m__v$n%05d")
-      assert(gen(1).isDirectory)
+    val wh = Files.createTempDirectory("graft_wh_mc").toString
+    val ld = new ParquetLoader(wh, "s")
+    ld.ensureNamespace()
+    ld.load(df2, "m", "replace")
+    ld.compact(spark, "m") // baseline: generation 1 live
+    def gen(n: Int) = new java.io.File(f"$wh/s/m__v$n%05d")
+    assert(gen(1).isDirectory)
 
-      // window A — crash BEFORE the flip: a dead-write generation dir
-      // exists but the manifest never pointed at it. Repair discards it;
-      // the compact then produces its own generation 2.
-      assert(gen(2).mkdirs())
-      Files.write(gen(2).toPath.resolve("part-dead.parquet"), "junk".getBytes)
-      ld.compact(spark, "m")
-      assert(ld.table(spark, "m").count() == 2L, "dead write must not leak rows")
-      assert(gen(2).isDirectory && !gen(1).exists)
+    // window A — crash BEFORE the flip: a dead-write generation dir
+    // exists but the manifest never pointed at it. Repair discards it;
+    // the compact then produces its own generation 2.
+    assert(gen(2).mkdirs())
+    Files.write(gen(2).toPath.resolve("part-dead.parquet"), "junk".getBytes)
+    ld.compact(spark, "m")
+    assert(ld.table(spark, "m").count() == 2L, "dead write must not leak rows")
+    assert(gen(2).isDirectory && !gen(1).exists)
 
-      // window B — crash AFTER the flip, cleanup lost: a stale OLD
-      // generation remains. Readers never see it (resolution is
-      // manifest-driven); the next compact finishes the cleanup.
-      assert(gen(1).mkdirs())
-      Files.write(gen(1).toPath.resolve("part-stale.parquet"), "junk".getBytes)
-      assert(ld.table(spark, "m").count() == 2L, "stale generation must be invisible")
-      ld.compact(spark, "m") // → generation 3
-      assert(!gen(1).exists && gen(3).isDirectory)
+    // window B — crash AFTER the flip, cleanup lost: a stale OLD
+    // generation remains. Readers never see it (resolution is
+    // manifest-driven); the next compact finishes the cleanup.
+    assert(gen(1).mkdirs())
+    Files.write(gen(1).toPath.resolve("part-stale.parquet"), "junk".getBytes)
+    assert(ld.table(spark, "m").count() == 2L, "stale generation must be invisible")
+    ld.compact(spark, "m") // → generation 3
+    assert(!gen(1).exists && gen(3).isDirectory)
 
-      // window C — FIRST flip's lost cleanup: the pre-manifest base dir
-      // remains. Same repair: invisible to readers, deleted on entry.
-      val base = new java.io.File(s"$wh/s/m")
-      assert(base.mkdirs())
-      Files.write(base.toPath.resolve("part-pre.parquet"), "junk".getBytes)
-      assert(ld.table(spark, "m").count() == 2L)
-      ld.compact(spark, "m")
-      assert(!base.exists)
+    // window C — FIRST flip's lost cleanup: the pre-manifest base dir
+    // remains. Same repair: invisible to readers, deleted on entry.
+    val base = new java.io.File(s"$wh/s/m")
+    assert(base.mkdirs())
+    Files.write(base.toPath.resolve("part-pre.parquet"), "junk".getBytes)
+    assert(ld.table(spark, "m").count() == 2L)
+    ld.compact(spark, "m")
+    assert(!base.exists)
 
-      // window D — manifest names a generation that is GONE (out-of-band
-      // deletion, not a crash window this protocol produces): loud error,
-      // nothing guessed
-      val live = gen(4)
-      assert(live.isDirectory)
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      rmTree(live)
-      val err = intercept[RuntimeException] { ld.compact(spark, "m") }
-      assert(err.getMessage.contains("out-of-band"), err.getMessage)
-    } finally spark.conf.unset("graft.compact.objectStoreSchemes")
+    // window D — manifest names a generation that is GONE (out-of-band
+    // deletion, not a crash window this protocol produces): loud error,
+    // nothing guessed
+    val live = gen(4)
+    assert(live.isDirectory)
+    def rmTree(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+    }
+    rmTree(live)
+    val err = intercept[RuntimeException] { ld.compact(spark, "m") }
+    assert(err.getMessage.contains("out-of-band"), err.getMessage)
+  }
+
+  test("ParquetLoader: compact survives a crash before every mutating filesystem call") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{Path => HPath}
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.graftfs.impl", classOf[GraftFileSystem].getName)
+    // a fragmented flat table, written once and copied per crash point
+    val template = Files.createTempDirectory("graft_wh_walk")
+    val tl = new ParquetLoader(s"graftfs://$template", "s")
+    tl.ensureNamespace()
+    val rows = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    (1 to 2).foreach(_ => tl.load(rows.repartition(2), "t", "append"))
+    val expected = (1 to 40).flatMap(i => Seq.fill(2)((i.toLong, s"v$i"))).sorted
+    def fresh(): (java.nio.file.Path, ParquetLoader) = {
+      val wh = Files.createTempDirectory("graft_wh_walk")
+      val tree = Files.walk(template)
+      try tree.forEach { p =>
+        val to = wh.resolve(template.relativize(p))
+        if (!Files.exists(to)) Files.copy(p, to)
+      } finally tree.close()
+      (wh, new ParquetLoader(s"graftfs://$wh", "s"))
+    }
+    def read(ld: ParquetLoader) = ld.table(spark, "t").as[(Long, String)].collect().sorted.toSeq
+    def compactWith(ld: ParquetLoader, failAt: Long): Unit = {
+      GraftFileSystem.arm(failAt)
+      try { ld.compact(spark, "t"); () } finally GraftFileSystem.disarm()
+    }
+    // a clean compaction fixes the range of crash points
+    val calls = {
+      val (_, ld) = fresh()
+      compactWith(ld, Long.MaxValue)
+      GraftFileSystem.calls.get
+    }
+    assert(calls > 0)
+    info(s"$calls crash points")
+    for (n <- 1L to calls) {
+      val (wh, ld) = fresh()
+      intercept[Exception](compactWith(ld, n))
+      assert(read(ld) == expected, s"crash before call $n of $calls: reader sees a torn table")
+      compactWith(ld, Long.MaxValue)
+      assert(read(ld) == expected, s"crash before call $n of $calls: recompaction lost rows")
+      val base = new HPath(s"graftfs://$wh/s/t")
+      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+      val live = ManifestCommit.resolve(fs, base)
+      assert(ManifestCommit.record.dirs(fs, base).map(_._2.getName) == Seq(live.getName),
+        s"crash before call $n of $calls: a generation besides the live $live survived")
+      assert(!fs.exists(base), s"crash before call $n of $calls: the base dir survived")
+    }
   }
 
   test("ParquetLoader: upsert_partitions targets the manifest-committed generation") {
     import spark.implicits._
-    spark.conf.set("graft.compact.objectStoreSchemes", "file")
-    try {
-      val wh = Files.createTempDirectory("graft_wh_mu").toString
-      val ld = new ParquetLoader(wh, "s")
-      ld.ensureNamespace()
-      val jan = Seq((1L, 10.0, "2024-01"), (2L, 20.0, "2024-01")).toDF("id", "v", "month")
-      val feb = Seq((3L, 30.0, "2024-02")).toDF("id", "v", "month")
-      ld.load(jan, "mu", "upsert_partitions", partitionBy = Seq("month"))
-      ld.compact(spark, "mu") // -> generation 1 (manifest mode)
-      assert(new java.io.File(s"$wh/s/mu__manifest").isFile)
-      // dynamic partition overwrite AFTER the flip: February accumulates
-      // in the LIVE generation; re-issued January replaces only January
-      ld.load(feb, "mu", "upsert_partitions", partitionBy = Seq("month"))
-      val jan2 = Seq((9L, 90.0, "2024-01")).toDF("id", "v", "month")
-      ld.load(jan2, "mu", "upsert_partitions", partitionBy = Seq("month"))
-      val ids = ld.table(spark, "mu").select("id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(ids == Seq(3L, 9L), ids.toString)
-      assert(!new java.io.File(s"$wh/s/mu").exists,
-        "dynamic overwrite must not resurrect the retired base dir")
-      // the migrate guard's layout walk also resolves via the manifest:
-      // a same-columns incremental write stays partition-scoped (no
-      // spurious full rewrite)
-      assert(ld.table(spark, "mu").count() == 2L)
-      // ...and a second compact rolls the generation with the data intact
-      ld.compact(spark, "mu")
-      assert(ld.table(spark, "mu").select("id").collect().map(_.getLong(0)).sorted.toSeq
-        == Seq(3L, 9L))
-    } finally spark.conf.unset("graft.compact.objectStoreSchemes")
+    val wh = Files.createTempDirectory("graft_wh_mu").toString
+    val ld = new ParquetLoader(wh, "s")
+    ld.ensureNamespace()
+    val jan = Seq((1L, 10.0, "2024-01"), (2L, 20.0, "2024-01")).toDF("id", "v", "month")
+    val feb = Seq((3L, 30.0, "2024-02")).toDF("id", "v", "month")
+    ld.load(jan, "mu", "upsert_partitions", partitionBy = Seq("month"))
+    ld.compact(spark, "mu") // -> generation 1 (manifest mode)
+    assert(new java.io.File(s"$wh/s/mu__manifest").isFile)
+    // dynamic partition overwrite AFTER the flip: February accumulates
+    // in the LIVE generation; re-issued January replaces only January
+    ld.load(feb, "mu", "upsert_partitions", partitionBy = Seq("month"))
+    val jan2 = Seq((9L, 90.0, "2024-01")).toDF("id", "v", "month")
+    ld.load(jan2, "mu", "upsert_partitions", partitionBy = Seq("month"))
+    val ids = ld.table(spark, "mu").select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(3L, 9L), ids.toString)
+    assert(!new java.io.File(s"$wh/s/mu").exists,
+      "dynamic overwrite must not resurrect the retired base dir")
+    // the migrate guard's layout walk also resolves via the manifest:
+    // a same-columns incremental write stays partition-scoped (no
+    // spurious full rewrite)
+    assert(ld.table(spark, "mu").count() == 2L)
+    // ...and a second compact rolls the generation with the data intact
+    ld.compact(spark, "mu")
+    assert(ld.table(spark, "mu").select("id").collect().map(_.getLong(0)).sorted.toSeq
+      == Seq(3L, 9L))
   }
 
   test("ParquetLoader: upsert_partitions rewrites only the incoming partition values") {

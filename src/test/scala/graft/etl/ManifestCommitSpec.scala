@@ -33,18 +33,18 @@ class ManifestCommitSpec extends AnyFunSuite {
   }
 
   test("parseManifest: only a complete terminated record parses") {
-    assert(ManifestCommit.parseManifest("v12\n").contains(12L))
-    assert(ManifestCommit.parseManifest("v1\n").contains(1L))
+    assert(ManifestCommit.record.parse("v12\n").contains(12L))
+    assert(ManifestCommit.record.parse("v1\n").contains(1L))
     // every proper prefix of `v12\n` is torn, including the bare-digits
     // prefix `v1` that a terminator-less format would accept as v1
     for (torn <- Seq("", "v", "v1", "v12", "12", "12\n", "v0\n", "v-1\n", "v1x\n", "v\n"))
-      assert(ManifestCommit.parseManifest(torn).isEmpty, s"'$torn' must be torn")
+      assert(ManifestCommit.record.parse(torn).isEmpty, s"'$torn' must be torn")
   }
 
   test("commit writes the terminated record; currentVersion round-trips") {
     val (fs, base) = freshFs()
     fs.mkdirs(base.getParent)
-    ManifestCommit.commit(fs, base, 7)
+    ManifestCommit.record.write(fs, base, 7)
     val in = fs.open(ManifestCommit.manifestPath(base))
     val raw =
       try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
@@ -59,7 +59,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     val g12 = mkGen(fs, base, 12)
     // crash persisted only `v1` of the intended `v12\n`
     writeManifestRaw(fs, base, "v1")
-    intercept[ManifestCommit.TornManifestException] {
+    intercept[PointerRecord.TornRecordException] {
       ManifestCommit.currentVersion(fs, base)
     }
     val live = ManifestCommit.repair(fs, base)
@@ -86,7 +86,7 @@ class ManifestCommitSpec extends AnyFunSuite {
       "stale generation below the legacy pointer is cleaned up")
     assert(ManifestCommit.currentVersion(fs, base).contains(3L))
     // the next commit upgrades the record to the terminated v<N> form
-    ManifestCommit.commit(fs, base, 4)
+    ManifestCommit.record.write(fs, base, 4)
     val in = fs.open(ManifestCommit.manifestPath(base))
     val raw =
       try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
@@ -121,7 +121,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     // a torn prefix `1` of a legacy `12\n` — generation 1 is long gone,
     // so the existence check rejects it and repair finds the survivor
     writeManifestRaw(fs, base, "1")
-    intercept[ManifestCommit.TornManifestException] {
+    intercept[PointerRecord.TornRecordException] {
       ManifestCommit.currentVersion(fs, base)
     }
     assert(ManifestCommit.repair(fs, base) == g12)
@@ -159,7 +159,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     val (fs, base) = freshFs()
     fs.mkdirs(base.getParent)
     writeManifestRaw(fs, base, "v9")
-    val err = intercept[ManifestCommit.TornManifestException] {
+    val err = intercept[PointerRecord.TornRecordException] {
       ManifestCommit.currentVersion(fs, base)
     }
     assert(!err.getMessage.contains("--repair"), err.getMessage)

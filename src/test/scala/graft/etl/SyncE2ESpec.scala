@@ -446,30 +446,23 @@ class SyncE2ESpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM costs").collect().head.getLong(0) ==
       loader.table(spark, "cur_g_normalized").count())
 
-    // compaction's two-rename swap through the FileSystem API
-    val (before, after) = loader.compact(spark, "raw_cur_g")
-    assert(before > 0 && after <= before, s"compact $before -> $after")
-    assert(loader.table(spark, "raw_cur_g").count() == rawCount)
-    assert(!new java.io.File(s"$wh/s/raw_cur_g__old").exists)
-    assert(!new java.io.File(s"$wh/s/raw_cur_g__compact").exists)
-    // ...and when graftfs is FLAGGED as an object-store scheme (rename =
-    // copy+delete), compaction switches to the manifest/pointer commit:
-    // new generation dir + atomic manifest flip instead of the swap.
-    // Same warehouse, same table, end-to-end over the non-file scheme.
-    spark.conf.set("graft.compact.objectStoreSchemes", "graftfs")
-    try {
-      val (b2, a2) = loader.compact(spark, "raw_cur_g")
-      assert(b2 > 0 && a2 <= b2, s"manifest compact $b2 -> $a2")
+    // compaction through the FileSystem API: one manifest route on this
+    // scheme as on every other — generation 1 retires the base dir, then
+    // generation 2 retires generation 1
+    for (gen <- Seq("raw_cur_g__v00001", "raw_cur_g__v00002")) {
+      val (before, after) = loader.compact(spark, "raw_cur_g")
+      assert(before > 0 && after <= before, s"compact $before -> $after")
       assert(new java.io.File(s"$wh/s/raw_cur_g__manifest").isFile)
-      assert(new java.io.File(s"$wh/s/raw_cur_g__v00001").isDirectory)
-      assert(!new java.io.File(s"$wh/s/raw_cur_g").exists,
-        "retired base generation must be cleaned up")
+      assert(new java.io.File(s"$wh/s/$gen").isDirectory)
       val resolved = loader.table(spark, "raw_cur_g")
       assert(resolved.count() == rawCount)
-      assert(resolved.inputFiles.forall(f =>
-        f.startsWith("graftfs://") && f.contains("raw_cur_g__v00001")),
+      assert(resolved.inputFiles.forall(f => f.startsWith("graftfs://") && f.contains(gen)),
         "reads must resolve the committed generation through graftfs")
-    } finally spark.conf.unset("graft.compact.objectStoreSchemes")
+    }
+    assert(!new java.io.File(s"$wh/s/raw_cur_g").exists,
+      "retired base generation must be cleaned up")
+    assert(!new java.io.File(s"$wh/s/raw_cur_g__v00001").exists,
+      "retired generation 1 must be cleaned up")
 
     // incremental mode over the non-file scheme: dynamic partition
     // overwrite (directory-level staging/commit inside the writer) and
@@ -497,9 +490,8 @@ class SyncE2ESpec extends SparkSpec {
     // (no hadoop-aws jar, no egress), driven offline by binding
     // fs.s3a.impl to a local-backed stub. Everything ELSE is the real
     // code: EngineConfig env parsing, Sessions.applyS3a, CurSource
-    // pruning over s3a:// URIs, the sync, and — without flagging any
-    // scheme conf — the manifest/pointer compaction route that `s3a`
-    // selects from the BUILT-IN object-store scheme set.
+    // pruning over s3a:// URIs, the sync, and the manifest/pointer
+    // compaction commit.
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.s3a.impl", classOf[S3aStubFileSystem].getName)
     val root = Files.createTempDirectory("graft_cur_s3a").toString
@@ -550,14 +542,12 @@ class SyncE2ESpec extends SparkSpec {
     val rawCount = loader.table(spark, "raw_cur_s3").count()
     assert(rawCount > 0)
 
-    // compaction takes the MANIFEST route with NO scheme conf set —
-    // s3a is in the built-in object-store set (rename is copy+delete
-    // on a real store, so the two-rename swap would be torn-window)
-    assert(spark.conf.getOption("graft.compact.objectStoreSchemes").isEmpty)
+    // compaction commits through the manifest (rename is a copy+delete
+    // on a real store, so only the one-object PUT is a safe commit point)
     val (before, after) = loader.compact(spark, "raw_cur_s3")
     assert(before > 0 && after <= before, s"compact $before -> $after")
     assert(new java.io.File(s"$wh/s/raw_cur_s3__manifest").isFile,
-      "s3a compaction must commit via the manifest, not the rename swap")
+      "s3a compaction must commit via the manifest")
     assert(loader.table(spark, "raw_cur_s3").count() == rawCount)
   }
 
@@ -585,6 +575,29 @@ class SyncE2ESpec extends SparkSpec {
     val cnt = spark.sql("SELECT count(*) FROM costs").collect().head.getLong(0)
     assert(cnt > 0 && cnt == loader.table(spark, "cur_a_normalized").count())
     assert(spark.catalog.tableExists("costs"))
+  }
+
+  test("durable costs view returns the same rows after compaction on file: and s3a") {
+    // compaction moves a table's live directory to a new generation; the
+    // path-based `costs` view Sync created before it must follow
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.s3a.impl", classOf[S3aStubFileSystem].getName)
+    for (scheme <- Seq("", "s3a://")) {
+      val wh = scheme + Files.createTempDirectory("graft_wh_view").toString
+      val loader = new ParquetLoader(wh, "s")
+      spark.catalog.dropTempView("costs")
+      Sync.run(spark, cfg(wh), loader,
+        Sync.Options(months = 1, asOf = LocalDate.parse("2024-01-15")))
+      def costs = spark.sql("SELECT count(*) FROM costs").collect().head.getLong(0)
+      val before = costs
+      assert(before > 0)
+      // twice: the first compaction retires the base dir, the second the
+      // generation the first one re-pointed the view at
+      for (_ <- 1 to 2) {
+        loader.compact(spark, "cur_a_normalized")
+        assert(costs == before, s"costs over '$wh' after compaction")
+      }
+    }
   }
 
   test("O3: month window prunes partitions in the physical plan") {

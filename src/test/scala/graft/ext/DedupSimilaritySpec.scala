@@ -258,10 +258,31 @@ class DedupSimilaritySpec extends SparkSpec {
     val p = Dedup.dedupPipeline(docs, "doc_id", "text", scores)
     try {
       // the confirmation stage scans the persisted candidate frame, not
-      // a recomputed shingle/signature/band front
-      val confirmedPlan = p.confirmed.queryExecution.executedPlan.toString
-      assert(confirmedPlan.contains("InMemoryTableScan"), confirmedPlan.take(400))
-      assert(!confirmedPlan.contains("graft_minhash"),
+      // a recomputed shingle/signature/band front: the confirmed cache's
+      // own operators — its plan down to, not into, the caches it scans —
+      // compute no shingles
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+      def kids(plan: SparkPlan): Seq[SparkPlan] = plan match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case other => other.children
+      }
+      def cacheScans(plan: SparkPlan): Seq[InMemoryTableScanExec] = plan match {
+        case s: InMemoryTableScanExec => Seq(s)
+        case other => kids(other).flatMap(cacheScans)
+      }
+      def ownNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+        case _: InMemoryTableScanExec => Nil
+        case other => other +: kids(other).flatMap(ownNodes)
+      }
+      val confirmedScan = cacheScans(p.confirmed.queryExecution.executedPlan)
+      assert(confirmedScan.nonEmpty, p.confirmed.queryExecution.executedPlan.toString.take(400))
+      val confirmStage = confirmedScan.head.relation.cachedPlan
+      assert(cacheScans(confirmStage).nonEmpty, confirmStage.toString.take(400))
+      assert(!ownNodes(confirmStage).exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.PortableShingleHashes]))),
         "confirm stage must reuse the cached front, not recompute signatures")
       // clusters are the persisted CC labels; kept reads them from cache
       val keptPlan = p.kept.queryExecution.executedPlan.toString

@@ -94,7 +94,7 @@ class IndexLifecycleSpec extends SparkSpec {
     // marker written) but before the promote PUT
     Dedup.compactDedupIndex(spark, dir)
     assert(ExactlyOnce.lastCommitted(fs, anchor).contains(2L))
-    ExactlyOnce.commitLedger(fs, anchor, 1L)
+    ExactlyOnce.record.write(fs, anchor, 1L)
 
     val during = Dedup.loadDedupIndex(spark, dir)
     assert(rows(during.fingerprints) == preFp,
@@ -372,7 +372,7 @@ class IndexLifecycleSpec extends SparkSpec {
     // crash window: full fold staged, promote rewound — old index serves
     Similarity.compactIndex(spark, dir)
     assert(ExactlyOnce.lastCommitted(fs, anchor).contains(2L))
-    ExactlyOnce.commitLedger(fs, anchor, 1L)
+    ExactlyOnce.record.write(fs, anchor, 1L)
     val during = Similarity.loadIndex(spark, dir)
     assert(during.codes.count() == 500)
     assert(serve(during) == before, "unpromoted fold must be invisible")
@@ -429,7 +429,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val reclaimed = Similarity.vacuumIndex(spark, dir)
     assert(reclaimed == 3, s"base codes + 1 append + 1 tombstone gen, got $reclaimed")
     val fs = fsOf(new HPath(s"$dir/tombstones"))
-    assert(ExactlyOnce.listBatchDirs(fs, new HPath(s"$dir/tombstones")).isEmpty,
+    assert(ExactlyOnce.record.dirs(fs, new HPath(s"$dir/tombstones")).isEmpty,
       "folded tombstone generations must be reclaimed")
     assert(ranking(10) == post, "vacuum must not change post-forget serving")
     // a NEW forget after the fold applies to the compacted base too

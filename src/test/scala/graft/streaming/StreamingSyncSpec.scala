@@ -352,7 +352,7 @@ class StreamingSyncSpec extends SparkSpec {
     b1.write.mode("overwrite").parquet(ExactlyOnce.batchDir(hp, 1L).toString)
     val out = fs.create(ExactlyOnce.ledgerPath(hp), true)
     try out.write("b1".getBytes("UTF-8")) finally out.close()
-    intercept[ExactlyOnce.TornLedgerException] {
+    intercept[graft.etl.PointerRecord.TornRecordException] {
       ExactlyOnce.readCommitted(spark, base)
     }
     // the replayed batch repairs: rewrite own dir, re-commit own id
@@ -395,12 +395,12 @@ class StreamingSyncSpec extends SparkSpec {
 
   test("exactly-once sink: ledger prefix-tear of a multi-digit id is torn, not a smaller id") {
     val hp = new org.apache.hadoop.fs.Path("/x/t")
-    assert(ExactlyOnce.parseLedger("b12\n").contains(12L))
-    assert(ExactlyOnce.parseLedger("b0\n").contains(0L), "batch 0 is a valid first commit")
-    assert(ExactlyOnce.parseLedger("b1").isEmpty, "torn prefix of b12 must not read as 1")
-    assert(ExactlyOnce.parseLedger("").isEmpty)
-    assert(ExactlyOnce.parseLedger("b\n").isEmpty)
-    assert(ExactlyOnce.parseLedger("12\n").isEmpty)
+    assert(ExactlyOnce.record.parse("b12\n").contains(12L))
+    assert(ExactlyOnce.record.parse("b0\n").contains(0L), "batch 0 is a valid first commit")
+    assert(ExactlyOnce.record.parse("b1").isEmpty, "torn prefix of b12 must not read as 1")
+    assert(ExactlyOnce.record.parse("").isEmpty)
+    assert(ExactlyOnce.record.parse("b\n").isEmpty)
+    assert(ExactlyOnce.record.parse("12\n").isEmpty)
   }
 
   test("exactly-once sink over graftfs:// object store: drain, restart, no duplicates") {
