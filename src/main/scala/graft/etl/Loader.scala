@@ -263,6 +263,35 @@ final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
     // first appears in the newest month
     Some(spark.read.option("mergeSchema", "true").parquet(dataDir(spark, table)))
 
+  /** Drop specific partition directories by their key=value chain
+    * (ordered as the table's partitionBy). The targeted complement of
+    * [[retention]]'s date sweep, needed by operations that must remove
+    * a partition ENTIRELY — e.g. a privacy purge that empties one
+    * ([[Privacy.forgetInWarehouse]]): Spark's dynamic partition
+    * overwrite only touches partitions PRESENT in the written frame,
+    * so an all-rows-purged partition would otherwise silently survive.
+    * Values are Hive-escaped into directory names exactly as the writer
+    * escapes them (':', '%', '=' …), and a NULL value maps to the
+    * `__HIVE_DEFAULT_PARTITION__` dir — without this, a fully-purged
+    * partition whose value needs escaping (or is NULL) would survive on
+    * disk while the caller reads "dropped".
+    * Returns the partitions actually removed. Idempotent. */
+  def dropPartitions(spark: SparkSession, table: String,
+      parts: Seq[Seq[(String, String)]]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val root = new HPath(dataDir(spark, table))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    parts.flatMap { kvs =>
+      require(kvs.nonEmpty, "dropPartitions: empty partition spec")
+      // getPartitionPathString maps null/empty to DEFAULT_PARTITION_NAME
+      // and Hive-escapes everything else — the writer's own convention
+      val p = kvs.foldLeft(root) { case (acc, (k, v)) =>
+        new HPath(acc, ExternalCatalogUtils.getPartitionPathString(k, v))
+      }
+      if (fs.exists(p) && fs.delete(p, true)) Some(p.toString) else None
+    }
+  }
+
   /** Partition-retention sweep — the warehouse's data-lifecycle op:
     * drop partitions whose period ENDS strictly before `before`
     * (a `date=d` dir when `d < before`; a `month` dir when its last
@@ -295,35 +324,6 @@ final class ParquetLoader(warehouseDir: String, schema: String) extends Loader {
     * ~100 TB to drop one expired month inverts the op's purpose. The
     * in-place sweep is idempotent and per-partition bounded; schedule
     * it in the same maintenance window compaction already requires. */
-  /** Drop specific partition directories by their key=value chain
-    * (ordered as the table's partitionBy). The targeted complement of
-    * [[retention]]'s date sweep, needed by operations that must remove
-    * a partition ENTIRELY — e.g. a privacy purge that empties one
-    * ([[Privacy.forgetInWarehouse]]): Spark's dynamic partition
-    * overwrite only touches partitions PRESENT in the written frame,
-    * so an all-rows-purged partition would otherwise silently survive.
-    * Values are Hive-escaped into directory names exactly as the writer
-    * escapes them (':', '%', '=' …), and a NULL value maps to the
-    * `__HIVE_DEFAULT_PARTITION__` dir — without this, a fully-purged
-    * partition whose value needs escaping (or is NULL) would survive on
-    * disk while the caller reads "dropped".
-    * Returns the partitions actually removed. Idempotent. */
-  def dropPartitions(spark: SparkSession, table: String,
-      parts: Seq[Seq[(String, String)]]): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val root = new HPath(dataDir(spark, table))
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    parts.flatMap { kvs =>
-      require(kvs.nonEmpty, "dropPartitions: empty partition spec")
-      // getPartitionPathString maps null/empty to DEFAULT_PARTITION_NAME
-      // and Hive-escapes everything else — the writer's own convention
-      val p = kvs.foldLeft(root) { case (acc, (k, v)) =>
-        new HPath(acc, ExternalCatalogUtils.getPartitionPathString(k, v))
-      }
-      if (fs.exists(p) && fs.delete(p, true)) Some(p.toString) else None
-    }
-  }
-
   def retention(spark: SparkSession, table: String,
       before: java.time.LocalDate, dryRun: Boolean = false): Seq[String] = {
     val root = new HPath(dataDir(spark, table))
@@ -694,15 +694,6 @@ final class JdbcLoader(url: String, user: String, password: String, schema: Stri
     }
   }
 
-  /** COUNT(*) on the target; 0 only if the table does not exist yet (the
-    * writer creates it on first append). Existence is probed via
-    * DatabaseMetaData rather than by swallowing SQLException around the
-    * COUNT — a transient failure (connection drop, lock timeout) must
-    * propagate to the per-path error handler, not masquerade as an empty
-    * table and make a committed load report 0 (or negative, for append)
-    * rows. Identifier case: unquoted DDL is case-folded per dialect
-    * (Derby/PG fold opposite directions), so the probe tries the exact,
-    * upper- and lower-cased forms. */
   /** Escape LIKE metacharacters for DatabaseMetaData pattern arguments:
     * every `_` in our underscore-heavy names is a single-char wildcard
     * unless escaped with the driver's escape string. */
@@ -726,6 +717,15 @@ final class JdbcLoader(url: String, user: String, password: String, schema: Stri
       probe(schema.toLowerCase, table.toLowerCase)
   }
 
+  /** COUNT(*) on the target; 0 only if the table does not exist yet (the
+    * writer creates it on first append). Existence is probed via
+    * DatabaseMetaData rather than by swallowing SQLException around the
+    * COUNT — a transient failure (connection drop, lock timeout) must
+    * propagate to the per-path error handler, not masquerade as an empty
+    * table and make a committed load report 0 (or negative, for append)
+    * rows. Identifier case: unquoted DDL is case-folded per dialect
+    * (Derby/PG fold opposite directions), so the probe tries the exact,
+    * upper- and lower-cased forms. */
   private def tableCount(table: String): Long = withConnection { c =>
     if (!tableExists(c, table)) 0L
     else {

@@ -31,14 +31,22 @@ object CorpusPipeline {
     * paragraph-cleaned corpus both feed on. Callers MUST run their
     * action before [[Prepared.unpersistAll]] — after it, every frame
     * here (chunks included) is UNUSABLE, not merely slow: the dedup
-    * stages' lineage bottoms out in released `localCheckpoint` blocks
+    * stages' lineage may bottom out in released `localCheckpoint` blocks
     * (see [[Dedup.DedupPipeline]]), so a post-release action fails
-    * rather than recomputes. */
+    * rather than recomputes. The quality gate's `(id, length_score)`
+    * frame is materialized once by [[prepare]] as a truncated leaf (it
+    * feeds the gate join and keep-best's scores); `unpersistAll`
+    * releases its blocks with the caches. Like the connected-components
+    * edges (see [[Dedup.truncated]]), that leaf is a `localCheckpoint`
+    * unless the session has a checkpoint dir: set a reliable one on a
+    * real cluster, or an executor lost between `prepare` and the write
+    * fails the write instead of recomputing the gate. */
   final case class Prepared(chunks: DataFrame, pipe: Dedup.DedupPipeline,
-      private val pdocs: DataFrame) {
+      private val pdocs: DataFrame, private[ext] val scores: DataFrame) {
     def unpersistAll(): Unit = {
       pipe.unpersistAll()
       pdocs.unpersist()
+      Dedup.releaseTruncated(scores)
       ()
     }
   }
@@ -65,10 +73,17 @@ object CorpusPipeline {
         docs.withColumn(textCol, TextOps.normalizeUnicode(col(textCol), form))
       case None => docs
     }
-    val filtered = TextOps.qualityFilter(docs0, idCol, textCol,
+    // the quality gate, scored ONCE: its (id, length_score) survivors
+    // feed both the gate join below and keep-best's scores. Built here by
+    // one job as a truncated leaf rather than a cache: AQE plans each
+    // scan of a cache as its own stage whose id stays in the canonical
+    // plan, so the paragraph pass's two identical broadcasts of a cached
+    // frame would both be built. Released by Prepared.unpersistAll.
+    val scores = Dedup.truncated(TextOps.qualityFilter(docs0, idCol, textCol,
       lang = lang, minTokens = minTokens, maxPunctRatio = maxPunctRatio,
       minStopwordRatio = minStopwordRatio)
-    val fdocs1 = docs0.join(filtered.select(idCol), idCol)
+      .select(col(idCol), col("length_score")))
+    val fdocs1 = docs0.join(scores.select(idCol), idCol)
     // optional LM-quality gate (e60's unigram surprisal, the CCNet
     // shape): docs whose MEAN token surprisal vs the corpus's own
     // unigram model exceeds the gate (micro-nats) are the
@@ -112,8 +127,7 @@ object CorpusPipeline {
       .filter(col("clean_text") =!= "")
       .select(col(idCol), col("clean_text").as(textCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pipe = Dedup.dedupPipeline(pdocs, idCol, textCol,
-      filtered.select(col(idCol), col("length_score")),
+    val pipe = Dedup.dedupPipeline(pdocs, idCol, textCol, scores,
       scoreCol = "length_score", k = k, bands = bands,
       minEstSim = minEstSim, maxEdit = maxEdit)
     val survivors = pdocs.select(idCol)
@@ -121,7 +135,7 @@ object CorpusPipeline {
       .union(pipe.kept.select(col("keep_id").as(idCol)))
     val chunks = TextOps.chunk(pdocs.join(survivors, idCol), idCol, textCol,
       chunkTokens = chunkTokens, overlapTokens = overlapTokens)
-    Prepared(chunks, pipe, pdocs)
+    Prepared(chunks, pipe, pdocs, scores)
   }
 
   final case class WriteResult(chunksWritten: Long, path: String)

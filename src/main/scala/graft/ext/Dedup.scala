@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -621,32 +621,65 @@ object Dedup {
     * bounds execution but not the plan, which AQE stringifies on every
     * update. Truncation keeps both execution and plan one round deep.
     *
+    * Driver finish: a near-dup graph is usually tiny next to the corpus
+    * that produced it (a few hundred confirmed pairs on thousands of
+    * documents), and there every round's fixed job cost dwarfs its
+    * work. So after the one-time truncation of the symmetrized edges,
+    * at most [[DriverFinishEdges]] + 1 of them are collected from those
+    * blocks. If the whole edge set fits, union-find labels it on the
+    * driver (the smaller root wins every union, so each root is its
+    * component's minimum) and the labels come back as a local relation:
+    * the same rows, names, types and nullability as the converged loop,
+    * with 0 rounds reported. If it does not fit (or the ids are not
+    * integral, or one is null), the star loop below runs on the same
+    * truncated edges — the candidate front executes once either way.
+    *
     * Output: (doc_id, cluster_rep) for every document that appears in a
-    * pair; singletons are their own trivial cluster and are omitted.
-    * The returned frame is persisted (it backs the converged labels) —
-    * call `.unpersist()` on it when done. If `maxIter` rounds pass
-    * without convergence, a warning is logged and the current
-    * (non-minimal for the farthest nodes) labels are returned. */
+    * pair with another document; singletons (and self-pair-only ids)
+    * are their own trivial cluster and are omitted. On the distributed
+    * path the returned frame is persisted (it backs the converged
+    * labels) — call `.unpersist()` on it when done (a no-op on the
+    * driver path's local relation). If `maxIter` rounds pass without
+    * convergence, a warning is logged and the current (non-minimal for
+    * the farthest nodes) labels are returned. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
     connectedComponentsFull(pairs, maxIter)._1
 
+  /** Symmetrized edges the driver finish labels at most: 2^20, and one
+    * edge per 4 KiB of driver heap below 4 GiB. Measured in local[4] on
+    * graphs of 8-node cycles at 2^16, 2^18 and 2^20 edges, the finish
+    * (plus one action over its labels) beat the star loop at each size,
+    * 3.5-4.0 s against 9-18 s at 2^20, and its sampled peak heap stayed
+    * below the loop's (0.6-0.8 GB against 1.7-2.0 GB at 2^20 on a
+    * 3 GiB heap). Its labels keep about 145 bytes per edge live. 2^20
+    * edges also ran on a 1 GiB heap, peaking at 0.6 GB of it; the heap
+    * rule keeps a small driver's bound below that (2^18 at 1 GiB). A
+    * graph past the bound pays its collect (within the finish's 2 s at
+    * 2^20) before the loop runs. */
+  private[ext] val DriverFinishEdges: Int =
+    math.min(1L << 20, Runtime.getRuntime.maxMemory / 4096).toInt
+
   /** [[connectedComponents]] plus the number of contraction rounds run —
-    * exposed for tests that pin the O(log diameter) convergence. */
+    * exposed for tests that pin the O(log diameter) convergence (they
+    * force the star loop with `driverBound = 0`). */
   private[ext] def connectedComponentsWithRounds(
-      pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
-    val (labels, rounds, _) = connectedComponentsFull(pairs, maxIter)
+      pairs: DataFrame, maxIter: Int = 20,
+      driverBound: Int = DriverFinishEdges): (DataFrame, Int) = {
+    val (labels, rounds, _) = connectedComponentsFull(pairs, maxIter, driverBound)
     (labels, rounds)
   }
 
-  /** Full handles: (clusters, rounds, final contracted edge frame). The
-    * edge frame is the LAST round's `localCheckpoint` — its blocks back
-    * the labels cache's lineage, so it must outlive any consumer that
-    * may recompute the labels; [[DedupPipeline.unpersistAll]] releases
-    * it together with the stage caches (standalone callers rely on the
-    * ContextCleaner reclaiming it when the frame goes unreferenced —
-    * the declared-query pattern). */
+  /** Full handles: (clusters, rounds, final contracted edge frame). On
+    * the distributed path the edge frame is the LAST round's
+    * `localCheckpoint` — its blocks back the labels cache's lineage, so
+    * it must outlive any consumer that may recompute the labels;
+    * [[DedupPipeline.unpersistAll]] releases it together with the stage
+    * caches (standalone callers rely on the ContextCleaner reclaiming it
+    * when the frame goes unreferenced — the declared-query pattern). The
+    * driver path releases the truncated edges itself, before returning. */
   private[ext] def connectedComponentsFull(
-      pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int, DataFrame) = {
+      pairs: DataFrame, maxIter: Int = 20,
+      driverBound: Int = DriverFinishEdges): (DataFrame, Int, DataFrame) = {
     // both edge directions from ONE pass over the input — a union of two
     // selects would execute the (possibly expensive) upstream candidate
     // pipeline twice to materialize the edge cache
@@ -655,12 +688,6 @@ object Dedup {
           struct(col("a"), col("b")),
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
-    // eager truncation (see scaladoc): materializes the round and cuts
-    // the logical plan to a leaf. Freed blocks are reclaimed by the
-    // ContextCleaner once the previous round's frame goes unreferenced.
-    def truncated(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // see [[releaseTruncated]] — Dataset.unpersist() can't reach these
     var edges = truncated(symmetrize(
       pairs.select(col("doc1").as("a"), col("doc2").as("b"))))
@@ -670,6 +697,14 @@ object Dedup {
     def labelsOf(e: DataFrame): DataFrame = e.groupBy(col("a"))
       .agg(least(col("a"), min(col("b"))).as("rep"))
       .select(col("a").as("doc"), col("rep"))
+    def output(labels: DataFrame): DataFrame =
+      labels.select(col("doc").as("doc_id"), col("rep").as("cluster_rep"))
+    driverFinish(edges, driverBound, output(labelsOf(edges)).schema) match {
+      case Some(local) =>
+        releaseTruncated(edges) // the local labels reference no block
+        return (local, 0, edges)
+      case None => ()
+    }
     // an empty node set sums to NULL → converged-empty, not an NPE
     def labelSum(df: DataFrame): Option[BigDecimal] =
       Option(df.agg(org.apache.spark.sql.functions.sum(
@@ -722,8 +757,66 @@ object Dedup {
     // cache entry — re-persisting it here would double-register the
     // entry and a later unpersist would drop it for both (see r5 note).
     // labels is already materialized by the loop's final labelSum action.
-    (labels.select(col("doc").as("doc_id"), col("rep").as("cluster_rep")), i, edges)
+    (output(labels), i, edges)
   }
+
+  /** The driver finish of [[connectedComponentsFull]]: `None` unless the
+    * truncated symmetric `edges` hold at most `bound` rows of non-null
+    * integral ids; else each id of a non-self edge labelled with its
+    * component minimum by union-find, as a local relation of `schema`
+    * (the star loop's output schema, so both paths type alike). One
+    * job: the single coalesced task stops reading after `bound + 1`
+    * rows. A `bound` of 0 turns the finish off. */
+  private def driverFinish(edges: DataFrame, bound: Int,
+      schema: StructType): Option[DataFrame] = {
+    if (bound <= 0) return None
+    // labels go back in the id column's own type
+    val box: Long => Any = schema.head.dataType match {
+      case LongType => identity
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => return None
+    }
+    val rows = edges.coalesce(1).limit(bound + 1).collect()
+    if (rows.length > bound || rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      return None
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    rows.foreach { r =>
+      val a = r.getAs[Number](0).longValue
+      val b = r.getAs[Number](1).longValue
+      // a self-pair alone makes no component: the star loop drops
+      // self-edges in its first round, so such an id is not labelled
+      if (a != b) {
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    val labels = parent.keys.toSeq.map(n => Row(box(n), box(find(n))))
+    // the star loop runs at least one round on any non-empty edge set,
+    // and a round's min aggregate makes both columns nullable; an empty
+    // edge set runs no round and keeps the input's nullability
+    val typed = if (rows.isEmpty) schema
+      else StructType(schema.map(_.copy(nullable = true)))
+    Some(edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(labels: _*), typed))
+  }
+
+  /** Eager lineage truncation (see [[connectedComponents]]): one job
+    * materializes `df` and its logical plan becomes a leaf — a reliable
+    * `checkpoint` when the session has a checkpoint dir, a
+    * `localCheckpoint` otherwise. Release with [[releaseTruncated]];
+    * unreleased blocks are reclaimed by the ContextCleaner once the
+    * frame goes unreferenced. */
+  private[ext] def truncated(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   /** Release the block-manager storage behind a `localCheckpoint`ed
     * frame. `Dataset.unpersist()` only uncaches cacheManager entries;
@@ -741,11 +834,14 @@ object Dedup {
 
   /** Handles to every stage of [[dedupPipeline]]. `candidates` and
     * `confirmed` are persisted — call [[unpersistAll]] when done, after
-    * which EVERY frame in this bundle is unusable: `clusters`/`kept`
-    * lineage bottoms out in the CC loop's `localCheckpoint` blocks
-    * (truncated lineage — there is no plan to recompute from), and
-    * [[unpersistAll]] releases those blocks. Run all actions (or
-    * materialize a copy) first. */
+    * which EVERY frame in this bundle is unusable. `clusters` need not
+    * be cache-backed: a graph within [[DriverFinishEdges]] comes back
+    * as a driver-built local relation (see [[connectedComponents]]);
+    * a larger one is the star loop's persisted labels, whose lineage
+    * (and so `kept`'s) bottoms out in the loop's `localCheckpoint`
+    * blocks (truncated lineage — there is no plan to recompute from).
+    * [[unpersistAll]] releases those truncated edges on either path.
+    * Run all actions (or materialize a copy) first. */
   final case class DedupPipeline(
       candidates: DataFrame, confirmed: DataFrame,
       clusters: DataFrame, kept: DataFrame,
@@ -755,7 +851,8 @@ object Dedup {
       // the CC loop's final localCheckpoint backs the (now-released)
       // labels cache's lineage; releasing it here instead of waiting on
       // the ContextCleaner means a completed pipeline run leaves ZERO
-      // cache entries behind (spec-asserted in CorpusPipelineSpec)
+      // cache entries behind (spec-asserted in CorpusPipelineSpec). The
+      // driver finish released it already; a second release is a no-op.
       releaseTruncated(ccEdges)
       ()
     }
@@ -906,19 +1003,33 @@ object Dedup {
     * — scans are the cheap currency at scale, exchanges the expensive
     * one. The two driver collects are one serialized filter each
     * (≤ numBits/8 bytes, BOUNDED). fpp tunes via `numBits`/`estItems`
-    * (1 MiB of filter handles ~1M distinct shingles at ~1% FP; FPs cost
-    * only wasted probe-side rows, never correctness). The survivor
-    * cache is the contamination sliver — small by the problem's nature;
-    * the ContextCleaner reclaims it (the declared-query pattern). */
+    * (FPs cost only wasted probe-side rows, never correctness). Left
+    * unset (≤ 0), both are sized without a job from the input's plan
+    * statistics (Spark's runtime-filter idiom): `estItems` is the
+    * input's size in bytes (a text of n bytes holds well under n
+    * shingles), `numBits` the optimal size for 1% FP at that count, and
+    * both are capped at 2^20 items and 2^23 bits (1 MiB), so a small
+    * input gets a small filter and no input a larger one — every probe
+    * task carries the filter as a literal. The same estimate sizes the
+    * survivor filter (survivors are train members plus false
+    * positives). The survivor cache is the contamination sliver —
+    * small by the problem's nature; the ContextCleaner reclaims it (the
+    * declared-query pattern). */
   def bloomDecontaminate(
       df: DataFrame, idCol: String, textCol: String, sourceCol: String,
       evalSource: String, trainSource: String,
       shingleWidth: Int = 3, threshold: Double = 0.0,
-      estItems: Long = 1L << 20, numBits: Long = 1L << 23): DataFrame = {
+      estItems: Long = 0L, numBits: Long = 0L): DataFrame = {
     val hashes = array_distinct(shingleHashes(col(textCol), shingleWidth))
+    val items = if (estItems > 0) estItems
+      else df.queryExecution.optimizedPlan.stats.sizeInBytes
+        .min(BigInt(1L << 20)).toLong.max(1L)
+    val bits = if (numBits > 0) numBits
+      else org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(items, 0.01)
+        .min(1L << 23)
     def bloomOf(sh: DataFrame): Array[Byte] = sh
       .agg(call_function("graft_bloom_agg",
-        xxhash64(col("sh")), lit(estItems), lit(numBits)).as("bf"))
+        xxhash64(col("sh")), lit(items), lit(bits)).as("bf"))
       .head().getAs[Array[Byte]]("bf") // null on empty input
     def probeWith(bf: Array[Byte]): Column =
       if (bf == null) lit(false) // empty side: nothing can match

@@ -14,6 +14,36 @@ class CorpusPipelineSpec extends SparkSpec {
   private def cachedRddIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** Operators of `plan` — through adaptive wrappers, query stages and
+    * every cached relation it scans, each cache counted once — that
+    * evaluate [[TextOps.qualityFilter]]'s punctuation-ratio regexp. */
+  private def gateEvaluations(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpReplace}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def isGate(n: SparkPlan) = n.expressions.exists(_.exists {
+      case r: RegExpReplace => r.regexp match {
+        case Literal(v, _) => String.valueOf(v) == "[.,!?;:]"
+        case _ => false
+      }
+      case _ => false
+    })
+    def walk(n: SparkPlan): Int = n match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec =>
+        if (seen.add(s.relation.cacheBuilder)) walk(s.relation.cachedPlan) else 0
+      // a file scan lists the filter condition it was offered (its
+      // dataFilters) without evaluating it: count evaluating operators
+      case other => (if (other.children.nonEmpty && isGate(other)) 1 else 0) +
+        other.children.map(walk).sum
+    }
+    walk(plan)
+  }
+
   test("prepareAndWrite: chunks land in the sink; no cache survives; output never cached") {
     val docs = T.documents(spark, "/root/testdata/sf0.01")
     val out = Files.createTempDirectory("graft_corpus_out").toString + "/chunks"
@@ -23,7 +53,23 @@ class CorpusPipelineSpec extends SparkSpec {
     // in the flow belongs in the sink, not executor storage
     val p = CorpusPipeline.prepare(docs)
     assert(p.chunks.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    // prepare materialized the quality gate's scores already (its one
+    // evaluation of the gate): the blocks behind their truncated leaf are
+    // persisted now, and unpersistAll below must free them
+    val scoreRdds = p.scores.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    assert(scoreRdds.nonEmpty && scoreRdds.forall(cachedRddIds.contains),
+      s"the gate's scores are not materialized by prepare: $scoreRdds")
+    // ...and the plan the sink writes evaluates the gate nowhere: counted
+    // through every cache it reads (each cache once), no operator holds
+    // the gate's punctuation-ratio regexp — both the gate join and
+    // keep-best read prepare's scores
+    assert(gateEvaluations(p.chunks.queryExecution.executedPlan) == 0,
+      p.chunks.queryExecution.executedPlan.toString.take(2000))
     p.unpersistAll()
+    assert(!scoreRdds.exists(cachedRddIds.contains),
+      s"unpersistAll left the gate's scores persisted: $scoreRdds")
 
     val res = CorpusPipeline.prepareAndWrite(docs, out)
     assert(res.chunksWritten > 0)

@@ -230,26 +230,72 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("near-dup clusters: connected components labels every node with its component min") {
     import spark.implicits._
-    // chain, pair, and cycle — including a component whose min enters late
+    // chain, pair, and cycle — including a component whose min enters late;
+    // the star loop itself (driver finish off: this graph would fit it)
     val pairs = Seq((2L, 3L), (1L, 2L), (10L, 11L), (22L, 20L), (21L, 22L), (20L, 21L))
       .toDF("doc1", "doc2")
-    val got = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val (labels, rounds) = Dedup.connectedComponentsWithRounds(pairs, driverBound = 0)
+    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(rounds > 0)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L))
+    labels.unpersist()
   }
 
   test("connected components contract a 64-doc chain in O(log diameter) rounds") {
     import spark.implicits._
     // diameter-63 chain: min-label propagation needs 63 rounds (and
     // would bail at maxIter=20 with wrong far labels); the large-star/
-    // small-star alternation must converge correctly in O(log) rounds
+    // small-star alternation must converge correctly in O(log) rounds.
+    // Driver finish off, else the chain is labelled in 0 rounds.
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("doc1", "doc2")
-    val (labels, rounds) = Dedup.connectedComponentsWithRounds(chain, maxIter = 20)
+    val (labels, rounds) = Dedup.connectedComponentsWithRounds(chain, maxIter = 20,
+      driverBound = 0)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(got == (1L to 64L).map(i => (i, 1L)), got.take(8).toString)
     assert(rounds <= 10, s"expected O(log diameter) rounds, got $rounds")
     labels.unpersist()
+  }
+
+  test("connected components: the driver finish labels exactly as the star loop") {
+    import spark.implicits._
+    // ~100 components in disjoint id ranges — chains, stars, cycles and
+    // random connected graphs — with shuffled ids inside each range (the
+    // minimum is not the first id), self-pairs (also on ids with no
+    // other edge, which neither path labels), duplicate and reversed
+    // edges, all in ONE frame so each path runs once
+    val rnd = new scala.util.Random(16L)
+    val expected = scala.collection.mutable.Map.empty[Long, Long]
+    val pairs = (0 until 100).flatMap { c =>
+      val n = 2 + rnd.nextInt(12)
+      val ids = rnd.shuffle((0 until n).map(i => c * 1000L + 10 + 7 * i))
+      ids.foreach(id => expected(id) = ids.min)
+      val edges = (c % 4) match {
+        case 0 => ids.sliding(2).map(w => (w(0), w(1))).toSeq
+        case 1 => ids.tail.map(id => (ids.head, id))
+        case 2 => ids.sliding(2).map(w => (w(0), w(1))).toSeq :+ ((ids.last, ids.head))
+        case _ => ids.indices.tail.map(i => (ids(rnd.nextInt(i)), ids(i))) ++
+          Seq.fill(n)((ids(rnd.nextInt(n)), ids(rnd.nextInt(n))))
+      }
+      val extra = Seq((ids.head, ids.head), edges.head, edges.head.swap) ++
+        (if (c % 5 == 0) Seq((c * 1000L + 999, c * 1000L + 999)) else Nil)
+      (edges ++ extra).map(e => if (rnd.nextBoolean()) e.swap else e)
+    }
+    val df = rnd.shuffle(pairs).toDF("doc1", "doc2")
+    def labelled(driverBound: Int) = {
+      val (labels, rounds) = Dedup.connectedComponentsWithRounds(df,
+        driverBound = driverBound)
+      val rows = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val schema = labels.schema
+      labels.unpersist()
+      (rows, schema, rounds)
+    }
+    val (onDriver, driverSchema, driverRounds) = labelled(Dedup.DriverFinishEdges)
+    val (distributed, loopSchema, loopRounds) = labelled(0)
+    assert(driverRounds == 0 && loopRounds > 0, s"$driverRounds / $loopRounds")
+    assert(driverSchema == loopSchema, s"$driverSchema != $loopSchema")
+    assert(distributed == expected.toMap)
+    assert(onDriver == distributed)
   }
 
   test("dedupPipeline shares one persisted candidate front across all stages") {
@@ -261,7 +307,7 @@ class DedupSimilaritySpec extends SparkSpec {
       // a recomputed shingle/signature/band front: the confirmed cache's
       // own operators — its plan down to, not into, the caches it scans —
       // compute no shingles
-      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
       def kids(plan: SparkPlan): Seq[SparkPlan] = plan match {
@@ -284,9 +330,14 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(!ownNodes(confirmStage).exists(_.expressions.exists(
         _.exists(_.isInstanceOf[graft.functions.PortableShingleHashes]))),
         "confirm stage must reuse the cached front, not recompute signatures")
-      // clusters are the persisted CC labels; kept reads them from cache
-      val keptPlan = p.kept.queryExecution.executedPlan.toString
-      assert(keptPlan.contains("InMemoryTableScan"), keptPlan.take(400))
+      // this graph fits the CC driver finish: kept reads the driver-built
+      // clusters (a local scan) and computes no shingles or signatures
+      val keptPlan = p.kept.queryExecution.executedPlan
+      assert(ownNodes(keptPlan).exists(_.isInstanceOf[LocalTableScanExec]),
+        keptPlan.toString.take(400))
+      assert(!ownNodes(keptPlan).exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.PortableShingleHashes]))),
+        "kept must not recompute the candidate front")
       // stage consistency: every kept row's cluster has >= 2 members
       // (singletons are omitted by CC), and keep_id is a cluster member
       val kept = p.kept.collect()
@@ -304,6 +355,11 @@ class DedupSimilaritySpec extends SparkSpec {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("doc1", "doc2")
     assert(Dedup.connectedComponents(empty).count() == 0)
+    // the star loop too, with the same empty, typed frame
+    val onDriver = Dedup.connectedComponents(empty)
+    val loop = Dedup.connectedComponentsWithRounds(empty, driverBound = 0)._1
+    assert(loop.count() == 0 && loop.schema == onDriver.schema)
+    loop.unpersist()
   }
 
   test("maxDf drops hot shingles from intersections but not from set sizes") {
